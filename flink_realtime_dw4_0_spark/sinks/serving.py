@@ -21,11 +21,18 @@ def serving_foreach_batch(
     table: KeyedTable,
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch writer: MERGE the micro-batch's (re)computed summary
-    rows into the serving table by window/dim key."""
+    rows into the serving table by window/dim key.
+
+    The batch is persisted so its stateful window plan runs once: merge()
+    reads it more than once (emptiness check, then the write), and an
+    empty batch commits nothing, so no probe of its own is needed."""
 
     def fn(batch: DataFrame, batch_id: int) -> None:
-        if batch.limit(1).count():
+        batch.persist()
+        try:
             table.merge(batch.sparkSession, batch)
+        finally:
+            batch.unpersist()
 
     return fn
 

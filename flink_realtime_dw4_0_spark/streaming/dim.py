@@ -11,7 +11,8 @@ the warehouse.  All driver-side effects are idempotent across replays.
 
 Scale notes: the config table is tiny → broadcast; the fact stream never
 shuffles (broadcast join + per-table filter), so per-batch cost is one
-scan of the batch + one MERGE per touched dim table.
+scan of the batch + one MERGE per touched dim table, the tables merging
+concurrently.
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..operators import etl, joins
 from ..sinks.dim import DimWarehouse
+from .overlap import run_concurrently
 
 
 def dim_transform(batch: DataFrame, config: DataFrame) -> DataFrame:
@@ -43,10 +45,13 @@ def dim_foreach_batch(
     def fn(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         config = config_provider(spark)
+        # bounded by the dim config, not by the batch: one row per
+        # configured source table (tens of rows)
         config_rows = config.collect()
         transformed = dim_transform(batch, config).persist()
-        try:
-            for cfg in config_rows:
+
+        def merge_rows(rows) -> None:
+            for cfg in rows:
                 sub = transformed.filter(F.col("sink_table") == cfg["sink_table"])
                 sub = sub.select(
                     F.element_at("data", cfg["sink_row_key"]).alias("rowkey"),
@@ -58,6 +63,16 @@ def dim_foreach_batch(
                     continue
                 warehouse.apply_ddl([{"sink_table": cfg["sink_table"], "op": "r"}])
                 warehouse.merge_dim_batch(spark, sub, cfg["sink_table"], row_key="rowkey")
+
+        # dim tables merge concurrently; rows sharing a sink table stay in
+        # one thunk, in config order, so each table keeps its write order
+        by_table: dict[str, list] = {}
+        for cfg in config_rows:
+            by_table.setdefault(cfg["sink_table"], []).append(cfg)
+        try:
+            run_concurrently(
+                spark, [lambda rows=rows: merge_rows(rows) for rows in by_table.values()]
+            )
         finally:
             transformed.unpersist()
 

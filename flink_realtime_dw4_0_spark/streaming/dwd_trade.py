@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..operators import project
 from ..sinks.upsert import KeyedTable
+from .overlap import run_concurrently
 
 GMALL = "gmall"
 
@@ -240,11 +241,14 @@ class OrderDetailJoin:
             stats[r["t"]] = (
                 n + r["n"], max(mx, r["mx"] or 0), touched | {str(r["b"])}
             )
-        for name, (table, new) in routes.items():
-            n, mx, touched = stats.get(name, (0, 0, set()))
-            if n:
-                table.merge(spark, new, touched_buckets=touched)
-                self._max_ts = max(self._max_ts, mx)
+        # the four side tables are independent: merge them concurrently
+        # (the out merge below reads all four, so it waits for them)
+        run_concurrently(spark, [
+            lambda t=table, df=new, b=stats[name][2]: t.merge(spark, df, touched_buckets=b)
+            for name, (table, new) in routes.items()
+            if name in stats
+        ])
+        self._max_ts = max([self._max_ts, *(mx for _, mx, _ in stats.values())])
         self._prune_ttl(spark)
 
         od_all = self.od.read(spark)

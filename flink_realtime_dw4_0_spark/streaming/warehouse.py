@@ -42,6 +42,7 @@ from ..streaming import dws
 from ..streaming.dim import dim_foreach_batch
 from ..streaming.dwd_log import dwd_log_foreach_batch, parquet_route_writers
 from ..streaming.dwd_trade import OrderDetailJoin, cart_add_transform, comment_info_transform
+from ..streaming.overlap import run_concurrently
 
 PAGE_SCHEMA = StructType(
     [
@@ -105,22 +106,33 @@ class Warehouse:
     def db_foreach_batch(self):
         dim_fn = dim_foreach_batch(self.dim_wh, self.config_provider)
 
+        def dim_then_comments(batch: DataFrame, batch_id: int) -> None:
+            # comments look up this batch's dictionary, so they follow the
+            # dim merge; merge() commits nothing for an empty result, and
+            # an empty dictionary yields no comments through the inner join
+            dim_fn(batch, batch_id)
+            base_dic = self.dim_wh.read_dim(self.spark, "dim_base_dic")
+            if base_dic is not None:
+                dic = base_dic.select(
+                    F.col("rowkey"), F.col("data").getItem("dic_name").alias("dic_name")
+                )
+                self.comment_table.merge(self.spark, comment_info_transform(batch, dic))
+
+        def cart_append(batch: DataFrame) -> None:
+            cart = cart_add_transform(batch)
+            if cart.limit(1).count():
+                cart.write.mode("append").parquet(self.cart_add_dir)
+
         def fn(batch: DataFrame, batch_id: int) -> None:
+            # the three branches write disjoint tables, so their jobs
+            # overlap; every branch ends before the batch is released
             batch.persist()
             try:
-                dim_fn(batch, batch_id)
-                cart = cart_add_transform(batch)
-                if cart.limit(1).count():
-                    cart.write.mode("append").parquet(self.cart_add_dir)
-                base_dic = self.dim_wh.read_dim(self.spark, "dim_base_dic")
-                if base_dic is not None and base_dic.limit(1).count():
-                    dic = base_dic.select(
-                        F.col("rowkey"), F.col("data").getItem("dic_name").alias("dic_name")
-                    )
-                    comments = comment_info_transform(batch, dic)
-                    if comments.limit(1).count():
-                        self.comment_table.merge(self.spark, comments)
-                self.od_join.process_batch(batch, self.spark)
+                run_concurrently(batch.sparkSession, [
+                    lambda: dim_then_comments(batch, batch_id),
+                    lambda: cart_append(batch),
+                    lambda: self.od_join.process_batch(batch, self.spark),
+                ])
             finally:
                 batch.unpersist()
 

@@ -685,6 +685,41 @@ def test_dws_window_to_serving_table(spark, tmp_path):
     assert rows[(0, "kw")] == 2  # first window flushed into serving
 
 
+def test_serving_sink_evaluates_batch_plan_once(spark, tmp_path):
+    """The serving sink reads its batch more than once (emptiness check,
+    then the write); persisting it must keep the batch plan — in the
+    warehouse, a stateful window aggregation — to one evaluation per
+    input row.  A Python UDF under the aggregation counts the rows it
+    evaluates."""
+    from flink_realtime_dw4_0_spark.sinks.serving import serving_foreach_batch
+
+    evaluated = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def tick(x):
+        evaluated.add(1)
+        return x
+
+    batch = (
+        spark.range(0, 40, numPartitions=2)
+        .select(tick("id").alias("id"))
+        .groupBy((F.col("id") % 8).alias("k"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        # a HAVING-style filter keeps every probe from short-cutting the
+        # aggregation, the way a stateful plan cannot be short-cut
+        .where(F.col("n") > 0)
+    )
+    table = KeyedTable(str(tmp_path / "serving_once"), keys=["k"])
+    fn = serving_foreach_batch(table)
+    fn(batch, 0)
+    assert evaluated.value == 40
+    assert sorted(r.n for r in table.read(spark).collect()) == [5] * 8
+    # an empty batch commits nothing
+    versions = table.history()
+    fn(batch.limit(0), 1)
+    assert table.history() == versions
+
+
 # --------------------------------------------------------------------------
 # Full layered warehouse e2e (ODS → DIM/DWD → DWS → serving)
 # --------------------------------------------------------------------------
@@ -797,6 +832,52 @@ def test_dim_delete_then_reinsert_same_batch(spark, tmp_path):
     ]), watermark=None), 1)
     rows = {r.rowkey: dict(r.data) for r in wh.read_dim(spark, "dim_base_dic").collect()}
     assert rows == {"1201": {"dic_code": "1201", "dic_name": "B"}}
+
+
+def test_dim_shared_sink_table_matches_serial(spark, tmp_path):
+    """Two config rows that share one sink table are merged by one
+    thread, in config order — the dim tables merge concurrently, but a
+    table never takes two writers at once (no CommitConflictError) and the
+    result equals the rows applied one config row at a time."""
+    rows = [
+        ("base_dic", "dim_shared", "dic_code,dic_name", "info", "dic_code", "r"),
+        ("base_province", "dim_shared", "id,name", "info", "id", "r"),
+        ("base_region", "dim_region", "id,region_name", "info", "id", "r"),
+    ]
+    config = spark.createDataFrame(rows, schemas.TABLE_PROCESS_DIM)
+    batches = [
+        ksrc.topic_db(values_df(spark, lines), watermark=None)
+        for lines in (
+            [
+                mx("base_dic", "insert", {"dic_code": "1201", "dic_name": "A"}, ts=1),
+                mx("base_province", "insert", {"id": "p1", "name": "Anhui"}, ts=1),
+                mx("base_region", "insert", {"id": "r1", "region_name": "East"}, ts=1),
+            ],
+            [
+                mx("base_dic", "update", {"dic_code": "1201", "dic_name": "B"}, ts=2),
+                mx("base_province", "delete", {"id": "p1", "name": "Anhui"}, ts=2),
+                mx("base_province", "insert", {"id": "p2", "name": "Hebei"}, ts=2),
+            ],
+        )
+    ]
+    wh = DimWarehouse(str(tmp_path / "dim_overlap"))
+    fn = dim_foreach_batch(wh, lambda s: config)
+    serial = DimWarehouse(str(tmp_path / "dim_serial"))
+    one_row_fns = [
+        dim_foreach_batch(serial, lambda s, r=r: spark.createDataFrame([r], schemas.TABLE_PROCESS_DIM))
+        for r in rows
+    ]
+    for i, b in enumerate(batches):
+        fn(b, i)
+        for one in one_row_fns:
+            one(b, i)
+
+    def snapshot(w, table):
+        return sorted((r.rowkey, sorted(r.data.items())) for r in w.read_dim(spark, table).collect())
+
+    for table in ("dim_shared", "dim_region"):
+        assert snapshot(wh, table) == snapshot(serial, table)
+    assert [k for k, _ in snapshot(wh, "dim_shared")] == ["1201", "p2"]
 
 
 def test_visitor_fix_invalid_then_valid_same_day(spark, tmp_path):
@@ -6228,3 +6309,83 @@ def test_warn_default_flip_once_per_family():
         assert not rec2
     finally:
         sess_mod._FLIP_WARNED.discard(fam)
+
+
+# --------------------------------------------------------------------------
+# Overlapped sink writes: the helper every foreachBatch body uses
+# --------------------------------------------------------------------------
+
+def test_run_concurrently_inherits_local_properties(spark):
+    """Thunks run on pool threads but see the caller's Spark local
+    properties, so their jobs keep the caller's attribution (here a job
+    group; in a foreachBatch body, the streaming query and batch id)."""
+    from flink_realtime_dw4_0_spark.streaming.overlap import run_concurrently
+
+    sc = spark.sparkContext
+    seen = []
+
+    def thunk():
+        seen.append(sc.getLocalProperty("overlap.test.batch"))
+        spark.range(3).count()
+
+    sc.setLocalProperty("overlap.test.batch", "batch-7")
+    sc.setLocalProperty("spark.jobGroup.id", "overlap-test-group")
+    try:
+        run_concurrently(spark, [thunk, thunk, thunk])
+    finally:
+        sc.setLocalProperty("overlap.test.batch", None)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert seen == ["batch-7"] * 3
+    assert len(sc.statusTracker().getJobIdsForGroup("overlap-test-group")) >= 3
+
+
+def test_run_concurrently_isolates_thunk_properties(spark):
+    """Each thunk gets its own copy of the local properties: one Spark
+    rewrites per job (the SQL execution id) must not leak into another
+    thunk's jobs."""
+    import threading
+
+    from flink_realtime_dw4_0_spark.streaming.overlap import run_concurrently
+
+    sc = spark.sparkContext
+    written, read = threading.Event(), threading.Event()
+    seen = []
+
+    def writer():
+        sc.setLocalProperty("overlap.test.leak", "writer")
+        written.set()
+        read.wait(30)
+
+    def reader():
+        written.wait(30)
+        seen.append(sc.getLocalProperty("overlap.test.leak"))
+        read.set()
+
+    run_concurrently(spark, [writer, reader])
+    assert seen == [None]
+
+
+def test_run_concurrently_raises_first_failure_after_all_finish(spark):
+    """The first failure in thunk order is re-raised, and only once every
+    thunk has finished — a failed batch never releases its inputs under
+    a job still in flight."""
+    import time
+
+    from flink_realtime_dw4_0_spark.streaming.overlap import run_concurrently
+
+    finished = []
+
+    def fails_late():
+        time.sleep(0.3)
+        raise ValueError("first in order")
+
+    def fails_early():
+        raise KeyError("first in time")
+
+    def slow():
+        time.sleep(1.0)
+        finished.append("slow")
+
+    with pytest.raises(ValueError, match="first in order"):
+        run_concurrently(spark, [fails_late, fails_early, slow])
+    assert finished == ["slow"]
