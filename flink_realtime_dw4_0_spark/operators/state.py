@@ -66,8 +66,8 @@ def visitor_fix_fn(
 
 
 def _visitor_apply(first_dt, pdf):
-    """THE visitor-fix decision table applied to one Arrow batch, shared
-    by both state-API backends: returns (output pdf, new first_dt)."""
+    """THE visitor-fix decision table applied to one Arrow batch:
+    returns (output pdf, new first_dt)."""
     pdf = pdf.sort_values(["ts", "event_id"])
     n = len(pdf)
     is_new = pdf["is_new"].to_numpy(dtype=object)
@@ -99,49 +99,7 @@ def _visitor_apply(first_dt, pdf):
     return out, first_dt
 
 
-def _visitor_fix_tws(with_dt: DataFrame) -> DataFrame:
-    """``transformWithStateInPandas`` twin of ``visitor_fix_fn`` — the
-    SAME decision table through ``_visitor_apply``, state as one
-    ValueState holding first_login_dt.  Equivalence and restart are
-    pinned by tests (the deprecation-path contract first_seen/rate_limit
-    established)."""
-    from ..session import ensure_protobuf
-
-    if not ensure_protobuf():
-        raise RuntimeError(
-            "visitor_fix(impl='tws') needs the public `protobuf` runtime "
-            "(transformWithState's state-server protocol); install "
-            "protobuf or use impl='apply'"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle, TimerValues,
-    )
-
-    class Proc(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.first = handle.getValueState("first_dt", _VISITOR_STATE)
-
-        def handleInputRows(
-            self, key, rows, timerValues: TimerValues
-        ) -> Iterator[pd.DataFrame]:
-            first_dt = self.first.get()[0] if self.first.exists() else None
-            for pdf in rows:
-                out, first_dt = _visitor_apply(first_dt, pdf)
-                yield out
-            self.first.update((first_dt,))
-
-        def close(self) -> None:
-            pass
-
-    return with_dt.groupBy("mid").transformWithStateInPandas(
-        Proc(),
-        outputStructType=_VISITOR_OUT,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
-def visitor_fix(df: DataFrame, impl: str = "auto") -> DataFrame:
+def visitor_fix(df: DataFrame) -> DataFrame:
     """T1 — apply the new-visitor fix to a stream with columns
     (mid, event_id, ts, is_new).  Keyed shuffle on mid, per-key ValueState —
     the same topology as keyBy + KeyedProcessFunction (DwdBaseLog.java:202-206).
@@ -149,39 +107,10 @@ def visitor_fix(df: DataFrame, impl: str = "auto") -> DataFrame:
     The event day is attached here as a JVM-side session-timezone
     `date_format` (the pipeline default is the reference's UTC+8,
     session.py) so streaming and batch day attribution agree.
-
-    ``impl='tws'`` runs the identical decision table on Spark 4.x's
-    ``transformWithStateInPandas`` (equivalence + restart pinned by
-    tests — the migration contract for the old API's deprecation).
-    The DEFAULT is ``'auto'`` (r10 flip, gated on this family's own
-    best-of-3 fresh-JVM canary-normalized A/B — BENCH_TWS_FLIP.json:
-    best tws 20,932 vs apply 21,430 rows/canary = 0.977, parity): tws
-    when the public protobuf runtime is importable, apply otherwise.
-    COLD-START TAX: tws launches a per-query state server once —
-    short-lived ``availableNow`` replays should pass ``impl='apply'``;
-    long-running streams amortize it to noise.  The r11
-    ``probe_tws_coldstart.py`` measurement refines this: the tax is
-    per-SESSION — tws queries after the first in one JVM ran at parity
-    with apply, so only one-shot fresh-JVM replays need the pin.
-    CHECKPOINT PINNING: ``'auto'`` resolves per environment (protobuf
-    importability), so restarting from an existing checkpoint on a
-    machine where the resolution differs selects a DIFFERENT stateful
-    physical operator against an incompatible state store — pin
-    ``impl`` explicitly for any checkpointed long-running query and
-    keep it for the checkpoint's lifetime.
     """
-    if impl not in ("auto", "apply", "tws"):
-        raise ValueError(f"impl must be auto|apply|tws, got {impl!r}")
-    if impl == "auto":
-        from ..session import ensure_protobuf, warn_default_flip
-
-        impl = "tws" if ensure_protobuf() else "apply"
-        warn_default_flip("visitor_fix", impl)
     with_dt = df.withColumn(
         "dt", F.date_format(F.timestamp_millis("ts"), "yyyy-MM-dd")
     )
-    if impl == "tws":
-        return _visitor_fix_tws(with_dt)
     return with_dt.groupBy("mid").applyInPandasWithState(
         visitor_fix_fn,
         outputStructType=_VISITOR_OUT,
@@ -254,81 +183,9 @@ def _first_seen_fn(ttl_ms: int):
 first_seen_fn = _first_seen_fn(0)
 
 
-def _first_seen_tws(with_dt: DataFrame, ttl_ms: int) -> DataFrame:
-    """``transformWithStateInPandas`` twin of ``_first_seen_fn`` — same
-    state (one 'seen' marker per (key, day)), same TTL contract
-    (event-time timer re-armed per activity, anchored to max(event ts,
-    watermark) so the first micro-batch's 0-watermark can't wipe live
-    state), same output schema.  The new API is Spark 4.x's successor to
-    ``applyInPandasWithState`` (which is slated for deprecation); the
-    processor is declared inside this builder so module import never
-    requires it."""
-    from ..session import ensure_protobuf
-
-    if not ensure_protobuf():
-        raise RuntimeError(
-            "first_seen(impl='tws') needs the public `protobuf` runtime "
-            "(transformWithState's state-server protocol); install "
-            "protobuf or use impl='apply'"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        ExpiredTimerInfo, StatefulProcessor, StatefulProcessorHandle,
-        TimerValues,
-    )
-
-    class Proc(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.handle = handle
-            self.seen = handle.getValueState("seen", _FIRST_SEEN_STATE)
-
-        def handleInputRows(
-            self, key, rows, timerValues: TimerValues
-        ) -> Iterator[pd.DataFrame]:
-            seen = self.seen.exists()
-            max_ts = 0
-            for pdf in rows:
-                pdf = pdf.sort_values("ts")
-                max_ts = max(max_ts, int(pdf["ts"].max()))
-                flags = np.zeros(len(pdf), dtype=np.int32)
-                if not seen and len(pdf):
-                    flags[0] = 1
-                    seen = True
-                yield pd.DataFrame(
-                    {
-                        "key": pdf["key"],
-                        "dt": pdf["dt"],
-                        "ts": pdf["ts"],
-                        "is_first": flags,
-                    }
-                )
-            self.seen.update((1,))
-            if ttl_ms > 0:
-                base = max(timerValues.getCurrentWatermarkInMs(), max_ts)
-                for t in self.handle.listTimers():  # re-arm on activity
-                    self.handle.deleteTimer(t)
-                self.handle.registerTimer(base + ttl_ms)
-
-        def handleExpiredTimer(
-            self, key, timerValues: TimerValues,
-            expiredTimerInfo: ExpiredTimerInfo,
-        ) -> Iterator[pd.DataFrame]:
-            self.seen.clear()  # TTL: drop the (key, day) marker
-            return iter(())
-
-        def close(self) -> None:
-            pass
-
-    return with_dt.groupBy("key", "dt").transformWithStateInPandas(
-        Proc(),
-        outputStructType=_FIRST_SEEN_OUT,
-        outputMode="append",
-        timeMode="eventTime" if ttl_ms > 0 else "none",
-    )
-
-
 def first_seen(
     df: DataFrame, delay: str = "24 hours",
-    ttl_ms: int | None = FIRST_SEEN_TTL_MS, impl: str = "auto",
+    ttl_ms: int | None = FIRST_SEEN_TTL_MS,
 ) -> DataFrame:
     """Per-(key, day) first-seen marker over a stream with columns
     (key, ts) — the UU dedup primitive behind A3/A4/A6 (SURVEY §2.5):
@@ -355,33 +212,12 @@ def first_seen(
     some other way); keep the default TTL when the flags feed a
     sink/foreachBatch directly — the warehouse instead layers flags
     through a DWD table (two queries), keeping both the TTL and the
-    windows.
-
-    ``impl='tws'`` runs the identical state machine on Spark 4.x's
-    ``transformWithStateInPandas`` (the successor API —
-    ``applyInPandasWithState`` is slated for deprecation).  The DEFAULT
-    is now ``'auto'`` — the r9 pilot flip, gated on the measured A/B
-    (BENCH_TWS_AB.json: rate-limit steady throughput 38,117 rows/s on
-    tws vs 36,271 on apply — parity; the wall-clock gap is one-time
-    query-start cost): ``auto`` resolves to ``'tws'`` when the public
-    protobuf runtime is importable (transformWithState's state-server
-    protocol needs it) and falls back to ``'apply'`` otherwise, so a
-    protobuf-less environment keeps working during the deprecation
-    window.  Both explicit spellings remain available; equivalence and
-    checkpoint-restart are pinned by tests for both."""
-    if impl not in ("auto", "apply", "tws"):
-        raise ValueError(f"impl must be auto|apply|tws, got {impl!r}")
-    if impl == "auto":
-        from ..session import ensure_protobuf
-
-        impl = "tws" if ensure_protobuf() else "apply"
+    windows."""
     ttl = ttl_ms or 0  # None and 0 both mean "no TTL" (NoTimeout)
     with_dt = df.withColumn("row_time", F.timestamp_millis("ts"))
     if ttl > 0:
         with_dt = with_dt.withWatermark("row_time", delay)
     with_dt = with_dt.withColumn("dt", F.date_format("row_time", "yyyy-MM-dd"))
-    if impl == "tws":
-        return _first_seen_tws(with_dt, ttl)
     return with_dt.groupBy("key", "dt").applyInPandasWithState(
         _first_seen_fn(ttl),
         outputStructType=_FIRST_SEEN_OUT,

@@ -5325,8 +5325,8 @@ def rate_limit_admit_q(spark, sf_dir):
     """Per-key rate limiting, batch twin (streaming.ratelimit): admit at
     most 5 events per user per hourly event-time window, tag the rest —
     the ingestion guard in front of expensive curation.  One window
-    shuffle on (key, window); the streaming State-API-v2 processor is
-    golden-tested for cross-batch window continuation."""
+    shuffle on (key, window); the streaming applyInPandasWithState
+    operator is golden-tested for cross-batch window continuation."""
     from ..streaming.ratelimit import rate_limit_batch
 
     ev = t(spark, sf_dir, "events").select(

@@ -29,102 +29,6 @@ from pyspark.sql import SparkSession
 REFERENCE_TZ = "Asia/Shanghai"
 HARNESS_TZ = "UTC"
 
-# Spark 4.x's transformWithStateInPandas talks to its state server over a
-# protobuf protocol (pyspark/sql/streaming/proto), which needs the PUBLIC
-# `protobuf` runtime at import time in every python worker.  This sandbox
-# has no pip, but ships a vanilla protobuf wheel inside the cloud-sdk's
-# bundled platform dir; if `google.protobuf` is not importable, splice
-# that copy onto sys.path AND PYTHONPATH (workers are forked by the JVM
-# and inherit the env, so this must run BEFORE the session launches).
-# Pure environment shim — no cloud service is referenced or used; on a
-# normally-provisioned cluster (pip install protobuf) this is a no-op.
-_PROTOBUF_FALLBACKS = [
-    "/usr/lib/google-cloud-sdk/platform/google_appengine",
-]
-# the shim dir exposes ONLY google/protobuf via symlink — never the
-# other packages bundled next to it (appengine/auth/oauth2/pyglib),
-# which would otherwise ride along on sys.path + worker PYTHONPATH and
-# could shadow same-named modules in every python worker
-# per-user path: a fixed shared /tmp name would let another local user
-# pre-create the dir with arbitrary code that every python worker imports
-_PROTOBUF_SHIM = os.path.join(
-    os.environ.get("TMPDIR", "/tmp"),
-    f"sparkdw-protobuf-shim-{os.getuid()}",
-)
-
-
-def _protobuf_shim_dir(src_root: str) -> str | None:
-    """Build (idempotently) a dir containing nothing but a
-    ``google/protobuf`` symlink into ``src_root``.  Returns the shim
-    path, or None when the filesystem refuses (read-only tmp) OR when a
-    pre-existing entry is anything but a symlink resolving to the
-    expected source — the caller then skips that fallback rather than
-    splice an untrusted dir onto every worker's PYTHONPATH."""
-    src = os.path.join(src_root, "google", "protobuf")
-    g = os.path.join(_PROTOBUF_SHIM, "google")
-    link = os.path.join(g, "protobuf")
-    try:
-        os.makedirs(g, exist_ok=True)
-        if os.path.islink(link):
-            if os.path.realpath(link) != os.path.realpath(src):
-                os.remove(link)
-                os.symlink(src, link)
-        elif os.path.exists(link):
-            # a real dir/file someone else planted — refuse to use it
-            return None
-        else:
-            os.symlink(src, link)
-        return _PROTOBUF_SHIM
-    except OSError:
-        return None
-
-
-def ensure_protobuf() -> bool:
-    """Make `google.protobuf` importable for this process and its python
-    workers if a local copy exists; returns availability."""
-    import importlib.util
-    import sys
-
-    def _has() -> bool:
-        try:  # find_spec raises when the parent 'google' pkg is absent
-            return importlib.util.find_spec("google.protobuf") is not None
-        except ModuleNotFoundError:
-            return False
-
-    if _has():
-        return True
-    for p in _PROTOBUF_FALLBACKS:
-        if not os.path.isdir(os.path.join(p, "google", "protobuf")):
-            continue
-        shim = _protobuf_shim_dir(p)
-        if shim is None:
-            continue
-        if shim not in sys.path:
-            sys.path.append(shim)
-        env = os.environ.get("PYTHONPATH", "")
-        if shim not in env.split(os.pathsep):
-            os.environ["PYTHONPATH"] = (
-                f"{env}{os.pathsep}{shim}" if env else shim
-            )
-        # a partially-imported namespace package (a failed earlier
-        # `import google.x`) would shadow the new path
-        sys.modules.pop("google", None)
-        # the bundled runtime (6.32.0-dev) is one minor behind the
-        # gencode pyspark ships (6.33); protobuf's own sanctioned
-        # escape hatch bypasses the strict-ordering guard — the wire
-        # protocol is unchanged at this delta, and on a pip-installed
-        # current runtime none of this triggers.  Set HERE, at splice
-        # time, by necessity: python workers inherit the JVM's env,
-        # captured at JVM launch — deferring this to the
-        # transformWithStateInPandas call site would be too late for
-        # the workers that actually import the generated protos.  It
-        # is only ever set when this fallback runtime is spliced.
-        os.environ.setdefault(
-            "TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK", "true"
-        )
-        return _has()
-    return False
-
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -136,41 +40,6 @@ def default_parallelism() -> int:
 _BLAS_CAP_VARS = ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS",
                   "MKL_NUM_THREADS", "NUMEXPR_NUM_THREADS")
 _BLAS_CAP_PRESET: set[str] = set()
-
-
-# Stateful families whose DEFAULT impl flipped from 'apply' to 'auto'
-# (evidence-gated, BENCH_TWS_FLIP.json) — a silent breaking change for
-# existing checkpoints that relied on the old default: restarting such
-# a checkpoint under a different resolved physical operator fails on
-# operator/state mismatch.  warn_default_flip emits ONE process-wide
-# warning per family the first time 'auto' resolves to something other
-# than the pre-flip default, so upgraders hit the README "Upgrade
-# notes" pointer before the restart error does.
-_FLIP_WARNED: set[str] = set()
-
-
-def warn_default_flip(family: str, resolved: str,
-                      prior_default: str = "apply") -> None:
-    """One-time-per-family upgrade warning when an ``impl='auto'``
-    default resolves to a different stateful physical operator than the
-    release that introduced the family defaulted to (see README
-    "Upgrade notes").  Checkpoints are bound to the operator that wrote
-    them; callers restarting an existing checkpointLocation must pin
-    ``impl`` explicitly."""
-    if resolved == prior_default or family in _FLIP_WARNED:
-        return
-    _FLIP_WARNED.add(family)
-    import warnings
-
-    warnings.warn(
-        f"{family}: the default impl now resolves to {resolved!r} "
-        f"(previously {prior_default!r}).  An existing checkpoint "
-        f"written under the old default cannot restart on the new "
-        f"operator (state-store mismatch) — pin impl={prior_default!r} "
-        f"to keep draining it, or restart from a fresh "
-        f"checkpointLocation.  See README 'Upgrade notes'.",
-        stacklevel=3,
-    )
 
 
 def get_spark(
@@ -186,7 +55,6 @@ def get_spark(
     (master then comes from spark-submit, not from here).
     """
     cpus = default_parallelism()
-    ensure_protobuf()  # before JVM launch: workers inherit PYTHONPATH
     # One BLAS thread per python worker (unless the caller overrides):
     # Spark supplies the parallelism as TASKS, and numpy's default of
     # one OpenBLAS/MKL pool per process sized to ALL cores means N

@@ -76,161 +76,6 @@ _STATE = StructType(
 )
 
 
-# Per-processor timer-memo capacity: ~60 B per entry, so the cap holds
-# worker memory under ~15 MB per partition even on extreme-cardinality
-# key spaces; eviction only costs the evicted key a listTimers fallback
-# on its next re-arm.
-_TIMER_MEMO_MAX = 200_000
-
-
-class _TwsState:
-    """GroupState-shaped adapter over a transformWithStateInPandas
-    ValueState + timer handle, so the CEP machine bodies (this module's
-    ``sequence_matcher_fn`` and ``cep_pattern``'s two matchers) run
-    VERBATIM on both state APIs — one transition implementation, zero
-    drift.  Exposes exactly the operations the machines use:
-    ``exists`` / ``get`` (properties, like GroupState),
-    ``getCurrentWatermarkMs``, ``update`` + ``setTimeoutTimestamp``
-    (register-after-clearing — TWS timers persist, GroupState's is
-    re-armed per invocation), and ``remove``.
-
-    ``timer_memo`` (r11, the cep_seq/nested-MR flip-gap work): the
-    adapter keeps AT MOST ONE live timer per key, so an LRU memo of
-    {key: registered_ts} per processor instance replaces the
-    listTimers round trip on every re-arm — an unchanged deadline
-    skips the state server entirely (0 RPCs instead of 3), a moved
-    deadline is delete+register (2).  SAFE because every machine
-    routed through ``run_matcher_tws`` clamps its re-arm to
-    ``max(min_deadline, wm + 1)``: a deadline equal to a timer that
-    already fired (ts <= wm) can never recur, so a memo hit always
-    refers to a timer that is genuinely still registered.  The memo is
-    a CACHE: a restarted worker starts empty and falls back to
-    listTimers, restoring the one-timer invariant before trusting the
-    memo again."""
-
-    def __init__(self, vs, handle, timer_values, timed_out: bool,
-                 key=None, timer_memo=None):
-        self._vs = vs
-        self._handle = handle
-        self._tv = timer_values
-        self.hasTimedOut = timed_out
-        self._key = key
-        self._memo = timer_memo
-
-    @property
-    def exists(self) -> bool:
-        return self._vs.exists()
-
-    @property
-    def get(self):
-        # array fields come back as sequences (normalize to list, like
-        # GroupState); scalar fields (e.g. the reservoir's count) pass
-        # through untouched
-        return tuple(
-            list(x) if isinstance(x, (list, tuple)) or hasattr(x, "__len__")
-            and not isinstance(x, (str, bytes)) else x
-            for x in self._vs.get()
-        )
-
-    def getCurrentWatermarkMs(self) -> int:
-        return self._tv.getCurrentWatermarkInMs()
-
-    def update(self, value) -> None:
-        self._vs.update(tuple(value))
-
-    def setTimeoutTimestamp(self, ts: int) -> None:
-        ts = int(ts)
-        if self._memo is None:
-            for t in self._handle.listTimers():
-                self._handle.deleteTimer(t)
-            self._handle.registerTimer(ts)
-            return
-        known = self._memo.get(self._key)
-        if known == ts:  # already armed there — 0 round trips
-            self._memo.move_to_end(self._key)
-            return
-        if known is not None:
-            self._handle.deleteTimer(known)  # idempotent if it fired
-        else:  # memo miss (fresh worker / evicted): restore invariant
-            for t in self._handle.listTimers():
-                self._handle.deleteTimer(t)
-        self._handle.registerTimer(ts)
-        self._memo[self._key] = ts
-        self._memo.move_to_end(self._key)
-        if len(self._memo) > _TIMER_MEMO_MAX:
-            self._memo.popitem(last=False)
-
-    def remove(self) -> None:
-        self._vs.clear()
-        if self._memo is not None:
-            known = self._memo.pop(self._key, None)
-            if known is not None:
-                self._handle.deleteTimer(known)
-                return
-        for t in self._handle.listTimers():
-            self._handle.deleteTimer(t)
-
-
-def run_matcher_tws(src, matcher, out_schema, state_schema, ctx: str):
-    """Run a GroupState-style keyed matcher generator on Spark 4.x's
-    ``transformWithStateInPandas`` through the ``_TwsState`` adapter:
-    ``handleInputRows`` feeds it rows; an expired event-time timer
-    re-enters it with empty input and ``hasTimedOut=True`` — exactly
-    GroupState's EventTimeTimeout invocation contract."""
-    from ..session import ensure_protobuf
-
-    if not ensure_protobuf():
-        raise RuntimeError(
-            f"{ctx}(impl='tws') needs the public `protobuf` runtime "
-            "(transformWithState's state-server protocol); install "
-            "protobuf or use impl='apply'"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        ExpiredTimerInfo, StatefulProcessor, StatefulProcessorHandle,
-        TimerValues,
-    )
-
-    from collections import OrderedDict
-
-    class Proc(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._vs = handle.getValueState("machine", state_schema)
-            # per-partition timer memo (see _TwsState): keys are sticky
-            # to their state-store partition across micro-batches, so
-            # the memo hit rate is ~1 after the first batch
-            self._timer_memo = OrderedDict()
-
-        def handleInputRows(
-            self, key, rows, timerValues: TimerValues
-        ) -> Iterator[pd.DataFrame]:
-            shim = _TwsState(self._vs, self._handle, timerValues, False,
-                             key=key, timer_memo=self._timer_memo)
-            yield from matcher(key, rows, shim)
-
-        def handleExpiredTimer(
-            self, key, timerValues: TimerValues,
-            expiredTimerInfo: ExpiredTimerInfo,
-        ) -> Iterator[pd.DataFrame]:
-            # the runtime deletes the fired timer itself: drop the memo
-            # entry so a later re-arm doesn't delete a fresh timer that
-            # happens to land on the stale memo value
-            self._timer_memo.pop(key, None)
-            shim = _TwsState(self._vs, self._handle, timerValues, True,
-                             key=key, timer_memo=self._timer_memo)
-            yield from matcher(key, iter(()), shim)
-
-        def close(self) -> None:
-            pass
-
-    return src.groupBy("key").transformWithStateInPandas(
-        Proc(),
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="eventTime",
-    )
-
-
 def sequence_matcher_fn(n_steps: int, within_ms: int):
     """Build the keyed state function: buffers events until the watermark
     seals them, then binds steps 0..n_steps-1 in event-time order; emits
@@ -335,7 +180,6 @@ def match_sequence_stream(
     ts: str = "ts",
     watermark: str = "10 seconds",
     event_id: str | None = None,
-    impl: str = "auto",
 ) -> DataFrame:
     """Streaming sequence matcher over a watermarked event stream.
 
@@ -346,36 +190,8 @@ def match_sequence_stream(
     timestamps deterministically; when absent a stable 64-bit hash of
     the row's (key, ts, mask) stands in.  Returns a stream of
     (key, status, anchor_ts, step_ts).
-
-    ``impl='tws'`` runs the identical machine on Spark 4.x's
-    ``transformWithStateInPandas`` via ``run_matcher_tws`` (equivalence
-    + restart pinned by tests, like every other stateful family).
-
-    The default is ``'auto'`` (r11 flip): the r10 gate read 0.916 —
-    below the 0.95 parity threshold — but the gap was the adapter's
-    ``listTimers`` round trip on every re-arm; with the r11 timer memo
-    the same best-of-3 fresh-JVM canary-normalized A/B
-    (BENCH_TWS_FLIP.json family ``cep_seq``) reads best tws 10,653 vs
-    apply 10,350 rows/canary = 1.029.  ``'auto'`` resolves to tws when
-    the public protobuf runtime is importable, apply otherwise.
-    COLD-START TAX: tws launches a per-query state server once —
-    short-lived ``availableNow`` replays should pass ``impl='apply'``.  The r11 ``probe_tws_coldstart.py`` measurement refines
-    this: the tax is per-SESSION — tws queries after the first
-    in one JVM ran at parity with apply, so only one-shot
-    fresh-JVM replays need the pin.
-    CHECKPOINT PINNING: ``'auto'`` resolves per environment, so
-    checkpointed long-running queries must pin ``impl`` explicitly
-    (see ``match_pattern_stream``).
     """
     from ..operators.cep import parse_within_ms
-
-    if impl not in ("auto", "apply", "tws"):
-        raise ValueError(f"impl must be auto|apply|tws, got {impl!r}")
-    if impl == "auto":
-        from ..session import ensure_protobuf, warn_default_flip
-
-        impl = "tws" if ensure_protobuf() else "apply"
-        warn_default_flip("match_sequence_stream (cep_seq)", impl)
 
     within_ms = parse_within_ms(within)  # shared with the batch matcher
 
@@ -401,13 +217,6 @@ def match_sequence_stream(
         )
         .filter(F.col("step_mask") != 0)  # non-participating events drop early
     )
-    if impl == "tws":
-        return run_matcher_tws(
-            src, sequence_matcher_fn(len(steps), within_ms),
-            _out_schema(), _STATE, "match_sequence_stream",
-        )
-    if impl != "apply":
-        raise ValueError(f"impl must be apply|tws, got {impl!r}")
     return src.groupBy("key").applyInPandasWithState(
         sequence_matcher_fn(len(steps), within_ms),
         outputStructType=_out_schema(),

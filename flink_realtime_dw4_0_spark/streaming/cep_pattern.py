@@ -72,7 +72,7 @@ from ..operators.cep import (
     validate_any_steps,
     validate_skip_target,
 )
-from .cep import _out_schema, run_matcher_tws
+from .cep import _out_schema
 
 _STATE = StructType(
     [
@@ -179,11 +179,6 @@ def _ingest_and_seal(
     prefix is untouched, so ordering semantics are identical)."""
     if not state.hasTimedOut:
         for pdf in pdfs:
-            # measure value columns are named mv_{i}, NOT __mv{i}:
-            # transformWithStateInPandas's Arrow bridge drops
-            # leading-dunder field names (they arrive positionally as
-            # _5, _6, ...), while applyInPandasWithState passes them
-            # through — one non-dunder convention keeps both APIs fed
             mv = [
                 pdf[f"mv_{i}"].astype("float64").to_numpy()
                 for i in range(n_meas)
@@ -818,7 +813,6 @@ def match_pattern_stream(
     max_anchors_per_key: int | None = None,
     after_match: str = "no_skip",
     measures: dict[str, tuple[str, str, str]] | None = None,
-    impl: str = "auto",
     _mr_strict: bool = False,
 ) -> DataFrame:
     """Streaming full-pattern matcher: the same ``pattern`` dicts as
@@ -839,33 +833,6 @@ def match_pattern_stream(
     contract); rejected with negated steps (terminal-negation holds
     outlive their measure context, and MATCH_RECOGNIZE patterns have no
     negations).
-
-    ``impl='tws'`` runs the IDENTICAL machine generator on Spark 4.x's
-    ``transformWithStateInPandas`` through the ``_TwsState`` adapter
-    (expired event-time timers re-enter it exactly like GroupState's
-    timeout invocation); equivalence and checkpoint-restart are pinned
-    by tests, completing the deprecation-path coverage for every
-    applyInPandasWithState family in the repo.
-
-    ``impl`` DEFAULTS to ``'auto'``, resolved on each family's own
-    flip evidence (BENCH_TWS_FLIP.json, best-of-3 fresh-JVM
-    canary-normalized): since the r11 timer memo removed the adapter's
-    per-re-arm ``listTimers`` round trip, EVERY machine in this module
-    resolves to tws when protobuf is importable (``cep_pattern_loop``
-    1.12, ``cep_seq`` 1.029, ``mr_nested`` 1.091, ``combinations``
-    1.072 — all past the 0.95 gate).  COLD-START TAX: tws launches a
-    per-query state server once — short-lived ``availableNow`` replays
-    should pass ``impl='apply'``; long-running streams amortize it to
-    noise.  The r11 ``probe_tws_coldstart.py`` measurement refines
-    this: the tax is per-SESSION — tws queries after the first
-    in one JVM ran at parity with apply, so only one-shot
-    fresh-JVM replays need the pin.
-    CHECKPOINT PINNING: ``'auto'`` resolves per environment
-    (protobuf importability), so a query restarted from an existing
-    checkpoint on a different machine could select a different stateful
-    physical operator against an incompatible state store — long-running
-    checkpointed queries should pin ``impl='apply'`` or ``impl='tws'``
-    explicitly and keep it for the checkpoint's lifetime.
 
     Plain alternation groups ``(A|B)`` additionally emit a
     ``<group>_classifier`` string column like the batch twin: the
@@ -913,13 +880,6 @@ def match_pattern_stream(
             "needs a timeout horizon to bound state and resolve anchors "
             "(the batch twin allows within=None; a stream cannot)"
         )
-    if impl not in ("auto", "apply", "tws"):
-        raise ValueError(f"impl must be auto|apply|tws, got {impl!r}")
-    if impl == "auto":
-        from ..session import ensure_protobuf, warn_default_flip
-
-        impl = "tws" if ensure_protobuf() else "apply"
-        warn_default_flip("match_pattern_stream (cep_pattern_loop)", impl)
     if any(p.get("allow_combinations") for p in pattern):
         raise ValueError(
             "allowCombinations is not a fork machine (a live fork per "
@@ -1118,17 +1078,6 @@ def match_pattern_stream(
             out_schema.fields
             + [StructField(nm, DoubleType()) for nm in measures]
         )
-    if impl == "tws":
-        # State API v2: the SAME matcher generator runs through the
-        # shared _TwsState adapter (streaming/cep.py) — handleInputRows
-        # feeds it rows, an expired event-time timer re-enters it with
-        # empty input and hasTimedOut=True (exactly GroupState's
-        # timeout invocation)
-        return run_matcher_tws(
-            src, matcher, out_schema, _STATE, "match_pattern_stream"
-        )
-    if impl != "apply":
-        raise ValueError(f"impl must be apply|tws, got {impl!r}")
     return src.groupBy("key").applyInPandasWithState(
         matcher,
         outputStructType=out_schema,
@@ -1154,7 +1103,6 @@ def match_recognize_stream(
     max_active_anchors: int = 16,
     max_anchors_per_key: int | None = None,
     measures: dict[str, tuple[str, str, str]] | None = None,
-    impl: str = "auto",
 ) -> DataFrame:
     """Streaming Flink SQL ``MATCH_RECOGNIZE`` — the same PATTERN /
     DEFINE / WITHIN / AFTER MATCH / MEASURES surface as the batch
@@ -1187,15 +1135,7 @@ def match_recognize_stream(
     semantics.  A terminal quantifier under strict contiguity is
     rejected (its match would complete on the BREAKING row, whose
     timestamp is not part of the match — restructure with an explicit
-    end step, as Flink MR patterns do in practice).
-
-    ``impl`` defaults to ``'auto'``, resolved on flip evidence (see
-    ``match_pattern_stream``): since the r11 timer memo, both the
-    linear and the nested machine resolve to tws when protobuf is
-    importable (``mr_nested`` re-ran at 1.091 past the 0.95 gate).
-    CHECKPOINT PINNING: ``'auto'`` resolves per environment, so
-    checkpointed long-running queries must pin ``impl`` explicitly and
-    keep it for the checkpoint's lifetime."""
+    end step, as Flink MR patterns do in practice)."""
     from ..operators.cep import _mr_is_nested, _mr_step_vars, \
         parse_mr_pattern
 
@@ -1203,26 +1143,12 @@ def match_recognize_stream(
         raise ValueError(
             f"contiguity must be strict|relaxed, got {contiguity!r}"
         )
-    if impl not in ("auto", "apply", "tws"):
-        raise ValueError(f"impl must be auto|apply|tws, got {impl!r}")
     steps = parse_mr_pattern(pattern)
     missing = [n for nm, _ in steps for n in _mr_step_vars(nm)
                if n not in define]
     if missing:
         raise ValueError(f"MATCH_RECOGNIZE: DEFINE missing for {missing}")
     if any(_mr_is_nested(nm) for nm, _ in steps):
-        # 'auto' resolves PER MACHINE on each family's own flip
-        # evidence (BENCH_TWS_FLIP.json): the nested machine's r10 A/B
-        # read 0.861 (kept apply), but the gap was the adapter's
-        # listTimers round trip per re-arm — with the r11 timer memo
-        # the re-run reads best tws/apply 1.091, so auto now resolves
-        # exactly like the linear machine (tws when protobuf is
-        # importable).
-        if impl == "auto":
-            from ..session import ensure_protobuf, warn_default_flip
-
-            impl = "tws" if ensure_protobuf() else "apply"
-            warn_default_flip("match_recognize_stream (mr_nested)", impl)
         return _mr_nested_stream(
             events, steps, partition_by=partition_by, order_by=order_by,
             event_id=event_id, define=define, within=within,
@@ -1230,7 +1156,6 @@ def match_recognize_stream(
             contiguity=contiguity, mode=mode,
             max_active_anchors=max_active_anchors,
             max_anchors_per_key=max_anchors_per_key, measures=measures,
-            impl=impl,
         )
     if contiguity == "strict" and steps[-1][1]:
         raise ValueError(
@@ -1285,7 +1210,6 @@ def match_recognize_stream(
         max_anchors_per_key=max_anchors_per_key,
         after_match=after_match,
         measures=all_meas or None,
-        impl=impl,
         _mr_strict=(contiguity == "strict"),
     )
     for gname, alts in cls_groups:
@@ -1472,7 +1396,6 @@ def match_combinations_stream(
     max_loop_candidates: int = 16,
     max_combinations: int = 128,
     max_active_anchors: int = 16,
-    impl: str = "auto",
 ) -> DataFrame:
     """Streaming Flink CEP ``oneOrMore().allowCombinations()`` — the
     r8-documented "no streaming leg" rejection, closed under the SAME
@@ -1503,21 +1426,7 @@ def match_combinations_stream(
     ALL events of the key flow through the operator (no mask
     pre-filter): ``taken_rns`` parity with the batch row_number needs
     every event counted, so the per-key rn counter persists for the
-    key's lifetime (2 longs per idle key).  ``impl='tws'`` runs the
-    identical generator on ``transformWithStateInPandas`` through the
-    shared ``_TwsState`` adapter; the DEFAULT is ``'auto'`` (r10 flip,
-    BENCH_TWS_FLIP.json family ``combinations``: best tws 7,941 vs
-    apply 7,407 rows/canary = 1.07): tws when the public protobuf
-    runtime is importable, apply otherwise.  COLD-START TAX: tws
-    launches a per-query state server once — short-lived
-    ``availableNow`` replays should pass ``impl='apply'``; long-running
-    streams amortize it to noise.  The r11 ``probe_tws_coldstart.py`` measurement refines
-    this: the tax is per-SESSION — tws queries after the first
-    in one JVM ran at parity with apply, so only one-shot
-    fresh-JVM replays need the pin.
-    CHECKPOINT PINNING: ``'auto'``
-    resolves per environment, so checkpointed long-running queries must
-    pin ``impl`` explicitly (see ``match_pattern_stream``).
+    key's lifetime (2 longs per idle key).
 
     Reference: Pattern.java combinations() semantics
     (flink-cep); parity is pinned by randomized shuffled-arrival
@@ -1530,13 +1439,6 @@ def match_combinations_stream(
     a, b, c, mn, mx = validate_combinations_pattern(
         pattern, max_loop_candidates
     )
-    if impl not in ("auto", "apply", "tws"):
-        raise ValueError(f"impl must be auto|apply|tws, got {impl!r}")
-    if impl == "auto":
-        from ..session import ensure_protobuf, warn_default_flip
-
-        impl = "tws" if ensure_protobuf() else "apply"
-        warn_default_flip("match_combinations_stream (combinations)", impl)
     within_ms = _pw(within)
     an, bn = a["name"], b["name"]
     mask = (
@@ -1579,20 +1481,13 @@ def match_combinations_stream(
         StructField("loop_combos_declined", LongType()),
         StructField("successor_ts", LongType()),
     ])
-    if impl == "tws":
-        out = run_matcher_tws(
-            src, matcher, out_schema, _STATE, "match_combinations_stream"
-        )
-    elif impl == "apply":
-        out = src.groupBy("key").applyInPandasWithState(
-            matcher,
-            outputStructType=out_schema,
-            stateStructType=_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    else:
-        raise ValueError(f"impl must be apply|tws, got {impl!r}")
+    out = src.groupBy("key").applyInPandasWithState(
+        matcher,
+        outputStructType=out_schema,
+        stateStructType=_STATE,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
     renames = {
         "anchor_ts": f"{an}_ts",
         "anchor_rn": f"{an}_rn",
@@ -1850,7 +1745,6 @@ def _mr_nested_stream(
     max_active_anchors: int,
     max_anchors_per_key: int | None,
     measures: dict | None,
-    impl: str,
 ) -> DataFrame:
     """Streaming MATCH_RECOGNIZE with NESTED alternation groups
     ``(A | B C+)`` — the batch ``_mr_variants`` expansion, live: the
@@ -2034,20 +1928,13 @@ def _mr_nested_stream(
         StructField("anchor_ts", LongType()),
         StructField("step_ts", ArrayType(LongType())),
     ] + [StructField(nm, DoubleType()) for nm in (measures or {})])
-    if impl == "tws":
-        out = run_matcher_tws(
-            src, matcher, out_schema, _STATE, "match_recognize_stream"
-        )
-    elif impl == "apply":
-        out = src.groupBy("key").applyInPandasWithState(
-            matcher,
-            outputStructType=out_schema,
-            stateStructType=_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    else:
-        raise ValueError(f"impl must be apply|tws, got {impl!r}")
+    out = src.groupBy("key").applyInPandasWithState(
+        matcher,
+        outputStructType=out_schema,
+        stateStructType=_STATE,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
     for gi, (_i, gname, _alts, texts) in enumerate(groups):
         labels = [texts[choice[gi]] for choice, _ in variants]
         out = out.withColumn(

@@ -3,15 +3,11 @@ crawl/CDC intake runs in front of expensive curation: admit at most
 ``cap`` events per key per tumbling event-time window, tag the rest
 ``admitted = 0`` (audit stream, not silent drop).
 
-Implementation note: both state backends are supported behind
-``impl=`` — the default ``applyInPandasWithState`` path and the State
-API v2 ``transformWithStateInPandas`` twin (reachable since the
-public-protobuf PYTHONPATH shim in ``session.ensure_protobuf``; the v2
-Python worker needs ``google.protobuf``).  Both run the SAME
+Implementation note: ``applyInPandasWithState`` runs the
 window→count transition (``_admit_batch``) with the map packed into
 two parallel array columns, and windows older than the newest-seen
 window minus ``keep_windows`` retire inline (the bounded-state
-contract a v2 TTL would give).
+contract a TTL would give).
 
 Semantics are deterministic per arrival order within (key, window):
 events are processed in (ts, event_id) order inside each micro-batch,
@@ -61,11 +57,10 @@ _STATE = StructType(
 
 
 def _admit_batch(k, local, pdfs, cap, window_ms, keep_windows):
-    """THE rate-limit state transition, shared by both state-API
-    backends: fold one micro-batch's events (in (ts, event_id) order)
-    through the window→count map, returning (output pdf or None,
-    packed (wins, counts) state tuple).  Windows older than the newest
-    keep_windows retire inline — bounded state on both APIs."""
+    """THE rate-limit state transition: fold one micro-batch's events
+    (in (ts, event_id) order) through the window→count map, returning
+    (output pdf or None, packed (wins, counts) state tuple).  Windows
+    older than the newest keep_windows retire inline — bounded state."""
     batch = [pdf[["ts", "event_id"]] for pdf in pdfs]
     if not batch:
         ws = sorted(local)
@@ -132,59 +127,6 @@ def rate_limit_fn(cap: int, window_ms: int, keep_windows: int = 8):
     return fn
 
 
-def _rate_limit_tws(src: DataFrame, cap: int, window_ms: int,
-                    keep_windows: int) -> DataFrame:
-    """``transformWithStateInPandas`` twin of the apply path — the state
-    API v2 home the module docstring always named (now reachable via the
-    public-protobuf shim): the SAME window→count transition through
-    ``_admit_batch``, state as one ValueState of (wins, counts) arrays.
-    Equivalence and checkpoint-restart are pinned by tests so the
-    default can flip when ``applyInPandasWithState`` is removed."""
-    from ..session import ensure_protobuf
-
-    if not ensure_protobuf():
-        raise RuntimeError(
-            "rate_limit_stream(impl='tws') needs the public `protobuf` "
-            "runtime (transformWithState's state-server protocol); "
-            "install protobuf or use impl='apply'"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle, TimerValues,
-    )
-
-    cap_, win_, keep_ = cap, window_ms, keep_windows
-
-    class Proc(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.state = handle.getValueState("wincounts", _STATE)
-
-        def handleInputRows(
-            self, key, rows, timerValues: TimerValues
-        ) -> Iterator[pd.DataFrame]:
-            if self.state.exists():
-                got = self.state.get()
-                local = dict(zip(got[0], got[1]))
-            else:
-                local = {}
-            out, packed = _admit_batch(
-                key[0], local, rows, cap_, win_, keep_
-            )
-            if out is None:
-                return
-            self.state.update(packed)
-            yield out
-
-        def close(self) -> None:
-            pass
-
-    return src.groupBy("key").transformWithStateInPandas(
-        Proc(),
-        outputStructType=OUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
 def rate_limit_stream(
     events: DataFrame,
     cap: int,
@@ -194,35 +136,10 @@ def rate_limit_stream(
     event_id: str = "event_id",
     watermark: str = "10 seconds",
     keep_windows: int = 8,
-    impl: str = "auto",
 ) -> DataFrame:
     """Apply the per-key rate limit to a stream with millisecond `ts`.
-    Returns every event tagged admitted 0/1 plus its window start.
-    ``impl='tws'`` runs the identical transition on Spark 4.x's
-    ``transformWithStateInPandas`` (successor to the slated-for-
-    deprecation ``applyInPandasWithState``) — see ``_rate_limit_tws``.
-    The DEFAULT is ``'auto'`` (r9 flip policy, gated on this family's
-    own measured A/B — BENCH_TWS_AB.json: steady 38,117 rows/s tws vs
-    36,271 apply): tws when the public protobuf runtime is importable,
-    apply otherwise.
-
-    COLD-START TAX: tws launches a per-query state server once, so a
-    SHORT-LIVED job (``availableNow`` / a few micro-batches) pays
-    seconds of one-time setup that steady-state parity never amortizes (r11 probe: the launch is per-SESSION — later tws queries
-    in the same JVM run at parity, so only one-shot fresh-JVM
-    replays pay it)
-    — in the driver A/B the tws WALL throughput read −40% vs apply
-    while steady-state was at parity (BENCH_TWS_AB.json wall vs steady
-    sections).  Long-running streams (the design target) amortize it to
-    noise; for short batch-ish replays pass ``impl='apply'``."""
+    Returns every event tagged admitted 0/1 plus its window start."""
     import re
-
-    if impl not in ("auto", "apply", "tws"):
-        raise ValueError(f"impl must be auto|apply|tws, got {impl!r}")
-    if impl == "auto":
-        from ..session import ensure_protobuf
-
-        impl = "tws" if ensure_protobuf() else "apply"
 
     m = re.match(r"(\d+)\s*(second|minute|hour)s?", window)
     if not m:
@@ -239,8 +156,6 @@ def rate_limit_stream(
         F.col(event_id).cast("long").alias("event_id"),
         "row_time",
     )
-    if impl == "tws":
-        return _rate_limit_tws(src, cap, window_ms, keep_windows)
     return src.groupBy("key").applyInPandasWithState(
         rate_limit_fn(cap, window_ms, keep_windows),
         outputStructType=OUT_SCHEMA,

@@ -49,48 +49,6 @@ def _check_weight_dtype(col: str, type_name: str) -> None:
         )
 
 
-def _run_reservoir_tws(src, fn, out_schema, state_schema, ctx: str):
-    """``transformWithStateInPandas`` twin runner for the reservoir
-    family: the SAME GroupState-style generator runs through the
-    ``_TwsState`` adapter (streaming/cep.py) — one fold implementation
-    on both state APIs.  The reservoirs are timer-free (NoTimeout on
-    the apply path), so ``timeMode='none'``."""
-    from ..session import ensure_protobuf
-
-    if not ensure_protobuf():
-        raise RuntimeError(
-            f"{ctx}(impl='tws') needs the public `protobuf` runtime "
-            "(transformWithState's state-server protocol); install "
-            "protobuf or use impl='apply'"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle, TimerValues,
-    )
-
-    from .cep import _TwsState
-
-    class Proc(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._vs = handle.getValueState("reservoir", state_schema)
-
-        def handleInputRows(
-            self, key, rows, timerValues: TimerValues
-        ) -> Iterator[pd.DataFrame]:
-            shim = _TwsState(self._vs, self._handle, timerValues, False)
-            yield from fn(key, rows, shim)
-
-        def close(self) -> None:
-            pass
-
-    return src.groupBy("key").transformWithStateInPandas(
-        Proc(),
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
 OUT_SCHEMA = StructType(
     [
         StructField("key", StringType()),
@@ -283,7 +241,6 @@ def weighted_reservoir_stream(
     salt: str = "wres",
     ts: str = "ts",
     watermark: str = "10 seconds",
-    impl: str = "auto",
 ) -> DataFrame:
     """Streaming Efraimidis–Spirakis A-Res: per key, the running
     weight-proportional k-sample of everything seen so far, as a
@@ -292,30 +249,9 @@ def weighted_reservoir_stream(
     of the same rows (golden-pinned) — ORDER-INDEPENDENT, unlike the
     unweighted reservoir, because top-k-by-key is a pure function of
     the row set.  Integer weights only, validated loud (they ride the
-    long-array state); duplicate ids no-op.  ``impl='tws'`` runs the
-    identical fold on ``transformWithStateInPandas``.  The DEFAULT is
-    ``'auto'`` (r9 flip policy, gated on the family's own measured A/B
-    — BENCH_RESERVOIR_AB.json: steady canary-normalized 6,981 tws vs
-    5,270 apply): tws when the public protobuf runtime is importable,
-    apply otherwise.
-
-    COLD-START TAX: tws launches a per-query state server once, so a
-    SHORT-LIVED job (``availableNow`` / a few micro-batches) pays
-    seconds of one-time setup that steady-state parity never amortizes (r11 probe: the launch is per-SESSION — later tws queries
-    in the same JVM run at parity, so only one-shot fresh-JVM
-    replays pay it)
-    (BENCH_RESERVOIR_AB.json wall vs steady: wall within 16% of apply
-    only because the run was long enough).  Long-running streams (the
-    design target) amortize it to noise; for short batch-ish replays
-    pass ``impl='apply'``."""
+    long-array state); duplicate ids no-op."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    if impl not in ("auto", "apply", "tws"):
-        raise ValueError(f"impl must be auto|apply|tws, got {impl!r}")
-    if impl == "auto":
-        from ..session import ensure_protobuf
-
-        impl = "tws" if ensure_protobuf() else "apply"
     _check_weight_dtype(
         weight_col, events.schema[weight_col].dataType.typeName()
     )
@@ -330,11 +266,6 @@ def weighted_reservoir_stream(
         F.col(weight_col).cast("long").alias("weight"),
         "row_time",
     )
-    if impl == "tws":
-        return _run_reservoir_tws(
-            src, weighted_reservoir_fn(k, salt), W_OUT_SCHEMA, _W_STATE,
-            "weighted_reservoir_stream",
-        )
     return src.groupBy("key").applyInPandasWithState(
         weighted_reservoir_fn(k, salt),
         outputStructType=W_OUT_SCHEMA,
@@ -352,35 +283,13 @@ def reservoir_sample_stream(
     event_id: str = "event_id",
     salt: str = "res",
     watermark: str = "10 seconds",
-    impl: str = "auto",
 ) -> DataFrame:
     """Apply the per-key deterministic reservoir to a stream with
     millisecond ``ts``.  Returns the slot CHANGELOG — keep the latest
     row per (key, slot) downstream; that set equals the batch
-    ``reservoir_sample`` of the same events.  ``impl='tws'`` runs the
-    identical fold on ``transformWithStateInPandas``.  The DEFAULT is
-    ``'auto'`` (r9 flip policy, gated on the family's own measured A/B
-    — BENCH_RESERVOIR_AB.json: steady canary-normalized 6,981 tws vs
-    5,270 apply): tws when the public protobuf runtime is importable,
-    apply otherwise.
-
-    COLD-START TAX: tws launches a per-query state server once, so a
-    SHORT-LIVED job (``availableNow`` / a few micro-batches) pays
-    seconds of one-time setup that steady-state parity never amortizes (r11 probe: the launch is per-SESSION — later tws queries
-    in the same JVM run at parity, so only one-shot fresh-JVM
-    replays pay it)
-    (BENCH_RESERVOIR_AB.json wall vs steady: wall within 16% of apply
-    only because the run was long enough).  Long-running streams (the
-    design target) amortize it to noise; for short batch-ish replays
-    pass ``impl='apply'``."""
+    ``reservoir_sample`` of the same events."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    if impl not in ("auto", "apply", "tws"):
-        raise ValueError(f"impl must be auto|apply|tws, got {impl!r}")
-    if impl == "auto":
-        from ..session import ensure_protobuf
-
-        impl = "tws" if ensure_protobuf() else "apply"
     src = events
     if "row_time" not in src.columns:
         src = src.withColumn(
@@ -392,11 +301,6 @@ def reservoir_sample_stream(
         F.col(event_id).cast("long").alias("event_id"),
         "row_time",
     )
-    if impl == "tws":
-        return _run_reservoir_tws(
-            src, reservoir_fn(k, salt), OUT_SCHEMA, _STATE,
-            "reservoir_sample_stream",
-        )
     return src.groupBy("key").applyInPandasWithState(
         reservoir_fn(k, salt),
         outputStructType=OUT_SCHEMA,
