@@ -23,9 +23,10 @@ def serving_foreach_batch(
     """foreachBatch writer: MERGE the micro-batch's (re)computed summary
     rows into the serving table by window/dim key.
 
-    The batch is persisted so its stateful window plan runs once: merge()
-    reads it more than once (emptiness check, then the write), and an
-    empty batch commits nothing, so no probe of its own is needed."""
+    The batch is persisted so its stateful window plan runs once: on an
+    existing table merge() reads it twice (touched-bucket probe, then the
+    write; a first merge reads it once, in the write), and an empty batch
+    commits nothing, so no probe of its own is needed."""
 
     def fn(batch: DataFrame, batch_id: int) -> None:
         batch.persist()

@@ -577,7 +577,8 @@ class KeyedTable:
         inherit: dict[str, str],
         flip: bool = True,
         expected_base: str | None | bool = False,
-    ) -> str:
+        skip_empty: bool = False,
+    ) -> str | None:
         """Crash-safe bucketed commit: write `df`'s rows partitioned by
         key-hash bucket into a fresh version dir, write the version's
         MANIFEST (rewritten buckets -> this version; `inherit` buckets ->
@@ -586,7 +587,11 @@ class KeyedTable:
         manifest references.  There is never a window with the table
         absent — a crash leaves either the old or the new version
         current, and an uncommitted version dir is invisible (HISTORY is
-        appended only after the flip)."""
+        appended only after the flip).
+
+        ``skip_empty``: when the write produced no bucket at all, drop the
+        build dir and return None instead of committing — the write itself
+        is the emptiness check, so no caller pays a separate job for one."""
         # fail fast on an un-bloomable column type BEFORE any bytes are
         # written (the sidecar builder re-checks for direct callers)
         for bcol in self.bloom_cols:
@@ -615,13 +620,16 @@ class KeyedTable:
         with open(os.path.join(build_dir, marker_name), "w") as fh:
             fh.write(str(int(time.time())))
         schema_json = df.schema.jsonValue()
-        # repartition on the bucket id BEFORE partitionBy: otherwise every
-        # task writes a file per bucket (tasks x buckets small files per
-        # version — observed 4x slower streaming merges); this bounds the
-        # file count at n_buckets while keeping the write parallel
+        # shuffle by the bucket id BEFORE partitionBy: every row of a
+        # bucket lands in one shuffle partition, so each bucket gets ONE
+        # file (without it every task writes a file per bucket — tasks x
+        # buckets small files, observed 4x slower streaming merges).  The
+        # shuffle is by column, not to a fixed n_buckets partitions, so
+        # AQE sizes the task count by the data: a 5-row batch writes from
+        # one task, a large rewrite keeps the write parallel.
         try:
             df.withColumn("__b", self._bucket_expr()).repartition(
-                self.n_buckets, "__b"
+                "__b"
             ).write.mode("append").partitionBy("__b").parquet(build_dir)
         except Exception as e:  # noqa: BLE001
             # GC-under-reader conflict: a concurrent commit can supersede
@@ -651,6 +659,9 @@ class KeyedTable:
             for d in os.listdir(build_dir)
             if d.startswith("__b=")
         }
+        if skip_empty and not written:
+            shutil.rmtree(build_dir, ignore_errors=True)
+            return None
         if self.bloom_cols and written:
             self._write_bloom_sidecars(df.sparkSession, build_dir, written)
         buckets = dict(inherit)
@@ -825,9 +836,12 @@ class KeyedTable:
     ) -> str | None:
         """MERGE: upsert `batch` rows by key (latest version wins within the
         batch), then remove keys present in `deletes`.  Returns the new
-        version name — or the unchanged current version (None for an
-        absent table) when the batch turns out to be empty, in which
-        case nothing is committed.  ``_flip=False`` stages the merge UNCOMMITTED (data +
+        version name — or, when the batch turns out to be empty, the
+        unchanged current version (None for an absent table) with nothing
+        committed (a staged merge still commits an empty version).
+        Emptiness costs no job of its own: on an absent table the commit
+        write finds no bucket written, on an existing one the
+        touched-bucket probe finds none.  ``_flip=False`` stages the merge UNCOMMITTED (data +
         manifest written, CURRENT untouched) — the cross-table transaction
         path (`sinks/txn.py`) flips staged versions under an intent
         journal; use `prepare_merge` rather than passing the flag.
@@ -871,13 +885,12 @@ class KeyedTable:
                 merged = merged.join(
                     deletes.select(*self.keys).distinct(), on=self.keys, how="left_anti"
                 )
-            if _flip and merged.isEmpty():
-                # don't materialize an empty table for an empty first
-                # batch — keeps read() returning None (table absent) and
-                # lets callers merge unconditionally
-                return None
+            # an empty first batch leaves the table absent (read() None);
+            # a staged merge still commits — a transaction needs a
+            # version name to journal
             return self._commit(
-                merged, inherit={}, flip=_flip, expected_base=cur_version
+                merged, inherit={}, flip=_flip, expected_base=cur_version,
+                skip_empty=_flip,
             )
 
         man = self._load_manifest(cur_version)

@@ -664,11 +664,12 @@ def test_dws_window_to_serving_table(spark, tmp_path):
 
 
 def test_serving_sink_evaluates_batch_plan_once(spark, tmp_path):
-    """The serving sink reads its batch more than once (emptiness check,
-    then the write); persisting it must keep the batch plan — in the
-    warehouse, a stateful window aggregation — to one evaluation per
-    input row.  A Python UDF under the aggregation counts the rows it
-    evaluates."""
+    """On an existing table the serving sink's merge reads its batch
+    twice (touched-bucket probe, then the write); persisting it must
+    keep the batch plan — in the warehouse, a stateful window
+    aggregation — to one evaluation per input row, on the first merge
+    and on later ones.  A Python UDF under the aggregation counts the
+    rows it evaluates."""
     from flink_realtime_dw4_0_spark.sinks.serving import serving_foreach_batch
 
     evaluated = spark.sparkContext.accumulator(0)
@@ -696,6 +697,65 @@ def test_serving_sink_evaluates_batch_plan_once(spark, tmp_path):
     versions = table.history()
     fn(batch.limit(0), 1)
     assert table.history() == versions
+    # a later merge into the now-existing table: probe + write, one pass
+    fn(batch, 2)
+    assert evaluated.value == 80
+
+
+def test_first_merge_evaluates_batch_plan_once(spark, tmp_path):
+    """A first merge into an absent table is a single Spark write: the
+    write itself decides emptiness, so the merge plan (here the
+    version-column window dedup) is not run a second time by a separate
+    emptiness job.  A Python UDF under the plan counts evaluated rows."""
+    evaluated = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def tick(x):
+        evaluated.add(1)
+        return x
+
+    batch = (
+        spark.range(0, 40, numPartitions=2)
+        .select(tick("id").alias("ts"))
+        .select((F.col("ts") % 8).alias("k"), "ts")
+    )
+    table = KeyedTable(str(tmp_path / "first_once"), keys=["k"], version_col="ts")
+    assert table.merge(spark, batch) is not None
+    assert evaluated.value == 40
+    got = {r.k: r.ts for r in table.read(spark).collect()}
+    assert got == {k: 32 + k for k in range(8)}  # latest ts per key wins
+
+
+def test_empty_first_merge_leaves_table_absent(spark, tmp_path):
+    """An empty first batch (after its deletes) commits nothing: read()
+    stays None, history() stays empty, and no version dir, committed or
+    in-build, is left under the table path."""
+    path = tmp_path / "empty_first"
+    table = KeyedTable(str(path), keys=["k"])
+    batch = spark.createDataFrame([("a", 1)], "k string, v long")
+    deletes = spark.createDataFrame([("a",)], "k string")
+    assert table.merge(spark, batch.limit(0)) is None
+    assert table.merge(spark, batch, deletes=deletes) is None
+    assert table.read(spark) is None
+    assert table.history() == []
+    left = os.listdir(path) if path.exists() else []
+    assert not [d for d in left if d.startswith(("v_", "tmp_v_"))]
+    # the table still comes into being on its first non-empty batch
+    assert table.merge(spark, batch) is not None
+    assert [(r.k, r.v) for r in table.read(spark).collect()] == [("a", 1)]
+
+
+def test_prepare_merge_of_empty_first_batch_stages_a_version(spark, tmp_path):
+    """A staged merge of an empty first batch still writes a version:
+    a cross-table transaction needs a version name to journal and flip.
+    Staging leaves the table unpublished."""
+    path = tmp_path / "staged_empty"
+    table = KeyedTable(str(path), keys=["k"])
+    v = table.prepare_merge(
+        spark, spark.createDataFrame([], "k string, v long"))
+    assert isinstance(v, str) and v.startswith("v_")
+    assert (path / v / "MANIFEST.json").exists()
+    assert table.read(spark) is None
 
 
 # --------------------------------------------------------------------------
@@ -1857,34 +1917,53 @@ def test_keyed_table_bucketed_incremental_merge(spark, tmp_path):
     import json as _json
     import os as _os
 
-    tb = KeyedTable(str(tmp_path / "bkt"), keys=["k"], n_buckets=16)
-    base = spark.createDataFrame([(f"k{i}", i) for i in range(500)], "k string, v long")
-    tb.merge(spark, base)
-    v1 = tb._current_version()
-    n_buckets_v1 = len([d for d in _os.listdir(tmp_path / "bkt" / v1) if d.startswith("__b=")])
-    assert n_buckets_v1 == 16  # 500 hashed keys land in every bucket
+    def bucket_dirs(vdir):
+        dirs = [d for d in _os.listdir(vdir) if d.startswith("__b=")]
+        # the commit shuffles by bucket id: ONE file per written bucket,
+        # whatever the shuffle-partition count
+        for d in dirs:
+            files = [f for f in _os.listdir(vdir / d) if f.endswith(".parquet")]
+            assert len(files) == 1, (vdir, d, files)
+        return dirs
 
-    tb.merge(spark, spark.createDataFrame([("k3", 999)], "k string, v long"))
-    v2 = tb._current_version()
-    v2_buckets = [d for d in _os.listdir(tmp_path / "bkt" / v2) if d.startswith("__b=")]
-    assert len(v2_buckets) == 1  # ONE key -> ONE rewritten bucket
-    with open(tmp_path / "bkt" / v2 / "MANIFEST.json") as fh:
-        man = _json.load(fh)
-    vals = set(man["buckets"].values())
-    assert vals == {v1, v2}  # 15 buckets inherited, 1 rewritten
-    # correctness: merged view is intact
-    got = {r.k: r.v for r in tb.read(spark).collect()}
-    assert len(got) == 500 and got["k3"] == 999 and got["k7"] == 7
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        # fewer and more shuffle partitions than buckets
+        for parts in (2, 32):
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            root = tmp_path / f"bkt{parts}"
+            tb = KeyedTable(str(root), keys=["k"], n_buckets=16)
+            base = spark.createDataFrame(
+                [(f"k{i}", i) for i in range(500)], "k string, v long")
+            tb.merge(spark, base)
+            v1 = tb._current_version()
+            # 500 hashed keys land in every bucket
+            assert len(bucket_dirs(root / v1)) == 16
 
-    # deletes also touch only their bucket and drop the key everywhere
-    tb.merge(spark, spark.createDataFrame([("k8", 8)], "k string, v long"),
-             deletes=spark.createDataFrame([("k3",)], "k string"))
-    got2 = {r.k: r.v for r in tb.read(spark).collect()}
-    assert "k3" not in got2 and len(got2) == 499
+            tb.merge(spark, spark.createDataFrame([("k3", 999)], "k string, v long"))
+            v2 = tb._current_version()
+            # ONE key -> ONE rewritten bucket
+            assert len(bucket_dirs(root / v2)) == 1
+            with open(root / v2 / "MANIFEST.json") as fh:
+                man = _json.load(fh)
+            vals = set(man["buckets"].values())
+            assert vals == {v1, v2}  # 15 buckets inherited, 1 rewritten
+            # correctness: merged view is intact
+            got = {r.k: r.v for r in tb.read(spark).collect()}
+            assert len(got) == 500 and got["k3"] == 999 and got["k7"] == 7
 
-    # reopening the table reads the same state (manifest round-trip)
-    tb2 = KeyedTable(str(tmp_path / "bkt"), keys=["k"], n_buckets=16)
-    assert tb2.read(spark).count() == 499
+            # deletes also touch only their bucket and drop the key everywhere
+            tb.merge(spark, spark.createDataFrame([("k8", 8)], "k string, v long"),
+                     deletes=spark.createDataFrame([("k3",)], "k string"))
+            bucket_dirs(root / tb._current_version())
+            got2 = {r.k: r.v for r in tb.read(spark).collect()}
+            assert "k3" not in got2 and len(got2) == 499
+
+            # reopening the table reads the same state (manifest round-trip)
+            tb2 = KeyedTable(str(root), keys=["k"], n_buckets=16)
+            assert tb2.read(spark).count() == 499
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def test_keyed_table_bloom_equality_skipping(spark, tmp_path):
