@@ -132,10 +132,10 @@ def main() -> None:
         print("=== DWS: traffic window serving table ===")
         tr = wh.traffic_serving.read(spark)
         (tr.orderBy("stt").show(truncate=False) if tr is not None else print("(empty)"))
-        print("=== DWS: home/detail UV (first_seen flags layered into window) ===")
+        print("=== DWS: home/detail UV (shared first_seen chain, src uv) ===")
         uv = wh.uv_serving.read(spark)
         (uv.orderBy("stt").show(truncate=False) if uv is not None else print("(empty)"))
-        print("=== DWS: cart-add unique users ===")
+        print("=== DWS: cart-add unique users (shared first_seen chain, src cart) ===")
         cu = wh.cart_uu_serving.read(spark)
         (cu.orderBy("stt").show(truncate=False) if cu is not None else print("(empty)"))
 

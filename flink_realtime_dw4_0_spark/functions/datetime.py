@@ -20,11 +20,6 @@ PARTITION_FMT = "yyyyMMdd"
 DAY_MS = 24 * 60 * 60 * 1000
 
 
-def datetime_to_ts(col: Column | str) -> Column:
-    """'yyyy-MM-dd HH:mm:ss' string → epoch millis (X1, DateFormatUtil.java:28-31)."""
-    return F.unix_millis(F.to_timestamp(col, DATETIME_FMT))
-
-
 def ts_to_date(col: Column | str) -> Column:
     """epoch millis → 'yyyy-MM-dd' (X2, DateFormatUtil.java:38-42)."""
     return F.date_format(F.timestamp_millis(col), DATE_FMT)
@@ -38,11 +33,6 @@ def ts_to_datetime(col: Column | str) -> Column:
 def ts_to_partition(col: Column | str) -> Column:
     """epoch millis → 'yyyyMMdd' partition key (X4, DateFormatUtil.java:55-59)."""
     return F.date_format(F.timestamp_millis(col), PARTITION_FMT)
-
-
-def date_to_ts(col: Column | str) -> Column:
-    """'yyyy-MM-dd' → epoch millis at midnight (X5, DateFormatUtil.java:66-68)."""
-    return F.unix_millis(F.to_timestamp(col, DATE_FMT))
 
 
 def ts_seconds_to_timestamp(col: Column | str) -> Column:

@@ -9,18 +9,6 @@ from pyspark.sql import functions as F
 LOG_ROUTES = ("err", "start", "display", "action", "page")
 
 
-def route_log(df: DataFrame) -> Column:
-    """F1 — classify each log record like the ProcessFunction router
-    (DwdBaseLog.java:76-133).  err is extracted first (:81-86), then start
-    vs page (:92-96); display/action are produced by explosion (F2), not
-    routing, so the scalar route is err/start/page."""
-    return (
-        F.when(F.col("err").isNotNull(), F.lit("err"))
-        .when(F.col("start").isNotNull(), F.lit("start"))
-        .otherwise(F.lit("page"))
-    )
-
-
 def split_log(df: DataFrame) -> dict[str, DataFrame]:
     """F1 — the 5-way split as N filtered scans of one (cached) batch.
 

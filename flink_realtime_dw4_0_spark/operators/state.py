@@ -212,11 +212,21 @@ def first_seen(
     some other way); keep the default TTL when the flags feed a
     sink/foreachBatch directly — the warehouse instead layers flags
     through a DWD table (two queries), keeping both the TTL and the
-    windows."""
+    windows.
+
+    An input that already has a ``row_time`` column keeps it, and its
+    watermark, as given; ``delay`` is then unused.  That is how a union
+    of inputs runs through one query: each input attaches its own
+    ``row_time`` and watermark before the union, and Spark's ``min``
+    policy keeps a fast input from making a slow one's rows late."""
     ttl = ttl_ms or 0  # None and 0 both mean "no TTL" (NoTimeout)
-    with_dt = df.withColumn("row_time", F.timestamp_millis("ts"))
-    if ttl > 0:
-        with_dt = with_dt.withWatermark("row_time", delay)
+    if "row_time" in df.columns:
+        # kept as given: re-deriving it would strip the caller's watermark
+        with_dt = df
+    else:
+        with_dt = df.withColumn("row_time", F.timestamp_millis("ts"))
+        if ttl > 0:
+            with_dt = with_dt.withWatermark("row_time", delay)
     with_dt = with_dt.withColumn("dt", F.date_format("row_time", "yyyy-MM-dd"))
     return with_dt.groupBy("key", "dt").applyInPandasWithState(
         _first_seen_fn(ttl),

@@ -192,11 +192,6 @@ def stopword_hits(tokens: Column, words: list[str]) -> Column:
     return F.size(F.filter(tokens, lambda t: F.array_contains(lit, t)))
 
 
-def lang_scores(col: Column | str) -> list[Column]:
-    toks = tokenize(col)
-    return [stopword_hits(toks, ws).alias(f"score_{lang}") for lang, ws in LANG_STOPWORDS.items()]
-
-
 def lang_id(col: Column | str) -> Column:
     """Language-ID heuristic: argmax stopword-hit score, lexicographic
     tiebreak, 'und' (undetermined) when all scores are 0."""

@@ -18,20 +18,26 @@ from .upsert import KeyedTable
 
 
 def serving_foreach_batch(
-    table: KeyedTable,
+    *routes: KeyedTable | tuple[KeyedTable, Callable[[DataFrame], DataFrame]],
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch writer: MERGE the micro-batch's (re)computed summary
-    rows into the serving table by window/dim key.
+    rows into serving tables by window/dim key.
+
+    A route is a table, which takes the whole batch, or a
+    ``(table, rows)`` pair, whose ``rows(batch)`` picks and shapes that
+    table's share — so one window query can feed several serving tables.
 
     The batch is persisted so its stateful window plan runs once: on an
     existing table merge() reads it twice (touched-bucket probe, then the
     write; a first merge reads it once, in the write), and an empty batch
     commits nothing, so no probe of its own is needed."""
+    pairs = [r if isinstance(r, tuple) else (r, lambda b: b) for r in routes]
 
     def fn(batch: DataFrame, batch_id: int) -> None:
         batch.persist()
         try:
-            table.merge(batch.sparkSession, batch)
+            for table, rows in pairs:
+                table.merge(batch.sparkSession, rows(batch))
         finally:
             batch.unpersist()
 

@@ -63,9 +63,3 @@ def jdbc_snapshot(
         .option("password", password)
         .load()
     )
-
-
-def config_snapshot_from_files(spark: SparkSession, path: str) -> DataFrame:
-    """Test/file-backed config snapshot with the same contract as
-    jdbc_snapshot (schema = TABLE_PROCESS_DIM minus op)."""
-    return spark.read.schema(schemas.TABLE_PROCESS_DIM).json(path)

@@ -79,25 +79,6 @@ def dim_foreach_batch(
     return fn
 
 
-def run_dim_pipeline(
-    raw_stream: DataFrame,
-    warehouse: DimWarehouse,
-    config_provider: Callable[[SparkSession], DataFrame],
-    checkpoint: str,
-    available_now: bool = False,
-):
-    """Wire: decoded topic_db stream → foreachBatch dim MERGE."""
-    from ..sources.kafka import topic_db
-
-    decoded = topic_db(raw_stream, watermark=None)
-    writer = decoded.writeStream.foreachBatch(
-        dim_foreach_batch(warehouse, config_provider)
-    ).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def schema_drift_report(
     batch: DataFrame, config: DataFrame
 ) -> DataFrame:

@@ -2,9 +2,9 @@
 (Constant.java:40-47), as Structured Streaming window aggs.
 
 Every table is `groupBy(window(row_time, size), dims).agg(...)` in append
-mode behind a watermark; UU variants run the first-seen keyed-state op
-first so each (key, day) contributes once.  All transforms also run on
-bounded frames (tests / backfill) unchanged.
+mode behind a watermark; the UU tables share one first-seen keyed-state
+op upstream, so each (source, key, day) contributes once.  All transforms
+also run on bounded frames (tests / backfill) unchanged.
 """
 
 from __future__ import annotations
@@ -77,9 +77,22 @@ def traffic_vc_ch_ar_is_new(page_log: DataFrame, size: str = WINDOW) -> DataFram
     return _flat(out)
 
 
-def home_detail_uv(first_seen_flags: DataFrame, size: str = WINDOW) -> DataFrame:
-    """A3 — UV of home/detail pages per window from first-seen flags
-    (operators/state.first_seen output) (Constant.java:42).
+def uu_key(src: str, key: Column) -> Column:
+    """Tag a unique-user key with its source table ("uv|<mid>",
+    "cart|<user_id>"), so one first-seen chain serves every UU table."""
+    return F.concat(F.lit(f"{src}|"), key)
+
+
+def is_uu_source(src: str) -> Column:
+    """The first-seen flag rows of one source (see ``uu_key``)."""
+    return F.col("key").startswith(f"{src}|")
+
+
+def unique_users(first_seen_flags: DataFrame, size: str = WINDOW) -> DataFrame:
+    """A3 + A6 — first-seen keys per window per source, from the
+    source-tagged flags of operators/state.first_seen: ``src`` "uv" is
+    the home/detail-page UV (Constant.java:42), "cart" the cart-add
+    unique users (Constant.java:45).  Returns (stt, edt, src, uu_ct).
 
     If the caller already attached a (watermarked) row_time it is kept —
     re-deriving it would strip the watermark tag and break append-mode
@@ -87,8 +100,15 @@ def home_detail_uv(first_seen_flags: DataFrame, size: str = WINDOW) -> DataFrame
     f = first_seen_flags.filter(F.col("is_first") == 1)
     if "row_time" not in f.columns:
         f = f.withColumn("row_time", F.timestamp_millis("ts"))
-    out = _win(f, size).agg(F.count(F.lit(1)).alias("uv_ct"))
+    f = f.withColumn("src", F.substring_index("key", "|", 1))
+    out = _win(f, size, "src").agg(F.count(F.lit(1)).alias("uu_ct"))
     return _flat(out)
+
+
+def uu_rows(uu: DataFrame, src: str, count_col: str) -> DataFrame:
+    """One source's rows of ``unique_users``, shaped as its serving
+    table: (stt, edt, <count_col>)."""
+    return uu.filter(F.col("src") == src).select("stt", "edt", F.col("uu_ct").alias(count_col))
 
 
 def user_login(log: DataFrame, size: str = WINDOW) -> DataFrame:
@@ -117,12 +137,6 @@ def user_register(topic_db: DataFrame, size: str = WINDOW) -> DataFrame:
     )
     out = _win(reg, size).agg(F.count(F.lit(1)).alias("register_ct"))
     return _flat(out)
-
-
-def cart_add_uu(cart_first_seen: DataFrame, size: str = WINDOW) -> DataFrame:
-    """A6 — cart-add unique users per window from first-seen flags
-    (Constant.java:45)."""
-    return home_detail_uv(cart_first_seen, size).withColumnRenamed("uv_ct", "cart_add_uu_ct")
 
 
 def sku_order(order_detail: DataFrame, sku_dim: DataFrame | None, size: str = WINDOW) -> DataFrame:

@@ -22,6 +22,14 @@ consumer's watermark advances only on events that survive its own filter.
 Consequence: a window over a quiet table flushes on that table's next
 event (or the query's no-data batch) rather than on unrelated topic
 traffic.  Results converge identically; only emission latency differs.
+
+The unique-user chain unions inputs that each keep their own watermark
+(page keys and cart keys into the flags query; the per-source flag reads
+into the UU window query).  Spark's default ``min`` policy takes the
+slowest input's watermark, so a fast page stream never makes cart rows
+late — but a quiet input also holds every UU window open until it moves
+(an input that has no rows in a run holds the query's watermark where it
+stood).  That changes emission latency, not results.
 """
 
 from __future__ import annotations
@@ -57,6 +65,22 @@ CART_ADD_SCHEMA = (
     "id string, user_id string, sku_id string, cart_price string, "
     "sku_num string, sku_name string, create_time string, ts long"
 )
+
+# first-seen flags DWD output (operators/state.first_seen)
+FLAGS_SCHEMA = "key string, dt string, ts long, is_first int"
+
+# checkpoint dirs of the layout that ran one flags query and one window
+# query per unique-user table; Warehouse refuses a root that holds them
+OLD_UU_CHECKPOINTS = ("dwd_uv_flags", "dwd_cart_uu_flags", "dws_uv", "dws_cart_uu")
+
+
+def _watermarked(df: DataFrame) -> DataFrame:
+    """Attach ``row_time`` from epoch-millis ``ts`` and this stream's
+    own 5 s watermark.  Each input of a union gets its own, so Spark's
+    ``min`` policy holds the query at its slowest input."""
+    return df.withColumn("row_time", F.timestamp_millis("ts")).withWatermark(
+        "row_time", "5 seconds"
+    )
 
 
 @dataclass
@@ -98,9 +122,16 @@ class Warehouse:
             os.path.join(paths.dws, "traffic"), keys=["stt", "vc", "ch", "ar", "is_new"]
         )
         self.uv_serving = KeyedTable(os.path.join(paths.dws, "home_detail_uv"), keys=["stt"])
-        self.uv_flags_dir = os.path.join(paths.dwd, "uv_flags")
         self.cart_uu_serving = KeyedTable(os.path.join(paths.dws, "cart_add_uu"), keys=["stt"])
-        self.cart_uu_flags_dir = os.path.join(paths.dwd, "cart_uu_flags")
+        self.flags_dir = os.path.join(paths.dwd, "first_seen_flags")
+        old = [d for d in OLD_UU_CHECKPOINTS if os.path.isdir(os.path.join(paths.ckpt, d))]
+        if old:
+            raise RuntimeError(
+                f"warehouse root {paths.root} holds checkpoints of the old "
+                f"two-chain unique-user layout ({', '.join(old)}); the merged "
+                "first-seen chain cannot resume them — restart from a fresh "
+                "warehouse root (README, Upgrade notes)"
+            )
 
     # ---- DWD (db side): one foreachBatch handles dim + trade facts ------
     def db_foreach_batch(self):
@@ -146,79 +177,75 @@ class Warehouse:
         )
         return dwd_log_foreach_batch(self.visitor_state, writers)
 
-    # ---- DWD2: A3's first-seen flags as their own layered table ---------
-    # Spark forbids redefining a watermark downstream of a watermarked
-    # stateful op, so first_seen-with-TTL cannot feed a windowed agg in
-    # ONE query (first_seen(ttl_ms=None) can, at the cost of unbounded
-    # state).  The warehouse keeps BOTH the TTL and the windows by
-    # layering the flags through a DWD table — exactly the reference's
-    # job-per-layer topology (flags job ≈ DwdBaseLog keyed state; window
-    # job ≈ the planned DWS app).
-    def _flags_query(self, keyed: DataFrame, flags_dir: str, name: str, available_now: bool):
+    # ---- DWD flags: one first-seen chain for every unique-user table ----
+    # The UU tables (A3 home/detail UV, A6 cart-add UU) share one
+    # first_seen query over source-tagged keys ("uv|<mid>",
+    # "cart|<user_id>").  The flags land in a DWD table that the DWS
+    # window query reads as its own stream, because Spark forbids a new
+    # watermark downstream of a watermarked stateful op: first_seen's
+    # event-time TTL and the windows cannot share one query.  This is
+    # the reference's job-per-layer topology (flags job ≈ DwdBaseLog
+    # keyed state; window job ≈ the planned DWS app).
+    def flags_queries(self, available_now: bool = True):
         from ..operators.state import first_seen
 
+        os.makedirs(self.paths.page_dir, exist_ok=True)
+        os.makedirs(self.cart_add_dir, exist_ok=True)
+        pages = self.spark.readStream.schema(PAGE_SCHEMA).parquet(self.paths.page_dir)
+        home_detail = _watermarked(
+            pages.filter(F.col("page.page_id").isin("home", "good_detail")).select(
+                dws.uu_key("uv", F.col("common.mid")).alias("key"), "ts"
+            )
+        )
+        carts = self.spark.readStream.schema(CART_ADD_SCHEMA).parquet(self.cart_add_dir)
+        cart_users = _watermarked(
+            carts.filter(F.col("user_id").isNotNull()).select(
+                dws.uu_key("cart", F.col("user_id")).alias("key"),
+                (F.col("ts") * 1000).alias("ts"),  # maxwell envelope ts is seconds
+            )
+        )
         w = (
-            first_seen(keyed, delay="5 seconds")
+            first_seen(home_detail.unionByName(cart_users))
             .writeStream.outputMode("append")
             .format("parquet")
-            .option("path", flags_dir)
-            .option("checkpointLocation", os.path.join(self.paths.ckpt, name))
+            .option("path", self.flags_dir)
+            .option("checkpointLocation", os.path.join(self.paths.ckpt, "dwd_flags"))
         )
         if available_now:
             w = w.trigger(availableNow=True)
-        return w.start()
-
-    def flags_queries(self, available_now: bool = True):
-        os.makedirs(self.paths.page_dir, exist_ok=True)
-        os.makedirs(self.cart_add_dir, exist_ok=True)
-        page_stream = self.spark.readStream.schema(PAGE_SCHEMA).parquet(self.paths.page_dir)
-        home_detail = page_stream.filter(
-            F.col("page.page_id").isin("home", "good_detail")
-        ).select(F.col("common.mid").alias("key"), "ts")
-        cart_stream = self.spark.readStream.schema(CART_ADD_SCHEMA).parquet(self.cart_add_dir)
-        cart_users = cart_stream.filter(F.col("user_id").isNotNull()).select(
-            F.col("user_id").alias("key"),
-            (F.col("ts") * 1000).alias("ts"),  # maxwell envelope ts is seconds
-        )
-        return [
-            self._flags_query(home_detail, self.uv_flags_dir, "dwd_uv_flags", available_now),
-            self._flags_query(cart_users, self.cart_uu_flags_dir, "dwd_cart_uu_flags", available_now),
-        ]
+        return [w.start()]
 
     # ---- DWS: native streaming window aggs over the DWD streams ---------
     def dws_queries(self, available_now: bool = True):
         os.makedirs(self.paths.page_dir, exist_ok=True)
-        os.makedirs(self.uv_flags_dir, exist_ok=True)
-        page_stream = (
-            self.spark.readStream.schema(PAGE_SCHEMA)
-            .parquet(self.paths.page_dir)
-            .withColumn("row_time", F.timestamp_millis("ts"))
-            .withWatermark("row_time", "5 seconds")
+        os.makedirs(self.flags_dir, exist_ok=True)
+        page_stream = _watermarked(
+            self.spark.readStream.schema(PAGE_SCHEMA).parquet(self.paths.page_dir)
         )
-        def flags_stream(flags_dir: str) -> DataFrame:
-            return (
-                self.spark.readStream.schema("key string, dt string, ts long, is_first int")
-                .parquet(flags_dir)
-                .withColumn("row_time", F.timestamp_millis("ts"))
-                .withWatermark("row_time", "5 seconds")
+
+        def flags(src: str) -> DataFrame:
+            # filtered before the watermark, so it advances on this
+            # source's rows only
+            return _watermarked(
+                self.spark.readStream.schema(FLAGS_SCHEMA)
+                .parquet(self.flags_dir)
+                .filter(dws.is_uu_source(src))
             )
 
-        os.makedirs(self.cart_uu_flags_dir, exist_ok=True)
+        uu_routes = [
+            (self.uv_serving, lambda b: dws.uu_rows(b, "uv", "uv_ct")),
+            (self.cart_uu_serving, lambda b: dws.uu_rows(b, "cart", "cart_add_uu_ct")),
+        ]
         specs = [
-            (dws.keyword_page_view(page_stream), self.kw_serving, "dws_kw"),
-            (dws.traffic_vc_ch_ar_is_new(page_stream), self.traffic_serving, "dws_traffic"),
-            (dws.home_detail_uv(flags_stream(self.uv_flags_dir)), self.uv_serving, "dws_uv"),
-            (
-                dws.cart_add_uu(flags_stream(self.cart_uu_flags_dir)),
-                self.cart_uu_serving,
-                "dws_cart_uu",
-            ),
+            (dws.keyword_page_view(page_stream), [self.kw_serving], "dws_kw"),
+            (dws.traffic_vc_ch_ar_is_new(page_stream), [self.traffic_serving], "dws_traffic"),
+            (dws.unique_users(flags("uv").unionByName(flags("cart"))), uu_routes, "dws_uu"),
         ]
         handles = []
-        for agg, table, name in specs:
+        for agg, routes, name in specs:
             w = (
                 agg.writeStream.outputMode("append")
-                .foreachBatch(serving_foreach_batch(table))
+                .foreachBatch(serving_foreach_batch(*routes))
                 .option("checkpointLocation", os.path.join(self.paths.ckpt, name))
             )
             if available_now:

@@ -803,6 +803,77 @@ def test_full_warehouse_end_to_end(spark, tmp_path):
     cu = {(r.stt.isoformat(), r.cart_add_uu_ct)
           for r in wh.cart_uu_serving.read(spark).collect()}
     assert cu == {("2024-01-01T00:00:00", 1)}
+    # layout: both UU tables share one flags query, one flags table and
+    # one window query
+    assert set(os.listdir(wh.paths.ckpt)) == {
+        "db", "log", "dwd_flags", "dws_kw", "dws_traffic", "dws_uu"}
+    assert [d for d in os.listdir(wh.paths.dwd) if "flags" in d] == ["first_seen_flags"]
+
+
+def test_warehouse_refuses_old_uu_checkpoints(spark, tmp_path):
+    """A root written by the layout with one flags query and one window
+    query per unique-user table fails at construction, naming the old
+    checkpoints and asking for a fresh root."""
+    from flink_realtime_dw4_0_spark.streaming.warehouse import (
+        OLD_UU_CHECKPOINTS, Warehouse, WarehousePaths,
+    )
+
+    for name in OLD_UU_CHECKPOINTS:
+        paths = WarehousePaths(str(tmp_path / name))
+        os.makedirs(os.path.join(paths.ckpt, name))
+        with pytest.raises(RuntimeError, match=f"{name}.*fresh warehouse root"):
+            Warehouse(spark, paths, lambda s: None)
+
+
+def test_uu_windows_keep_per_source_watermarks(spark, tmp_path):
+    """Cart-add UU stays exact when the page stream runs far ahead.
+
+    Drain 1 sees page events about an hour past its only cart event.
+    Drain 2 (same root, resumed from the checkpoints) adds a cart for a
+    new user 2 s after the first, plus a later cart that closes their
+    window.  With one watermark per source the page stream never makes
+    the second cart late, so the window counts both users; one watermark
+    shared by both sources would have dropped it.
+
+    Drain 2 also carries a page event: a resumed query counts an input
+    that has no rows in the run at the restored watermark, so without
+    page traffic the quiet page input would hold the window open (later
+    emission, same result)."""
+    from flink_realtime_dw4_0_spark import demo
+    from flink_realtime_dw4_0_spark.sources.kafka import file_json_raw
+    from flink_realtime_dw4_0_spark.streaming.warehouse import Warehouse, WarehousePaths
+
+    day_s = demo.DAY1 // 1000
+
+    def cart(cid, user, ts_s):
+        return demo._mx("cart_info", "insert", {
+            "id": cid, "user_id": user, "sku_id": "s1", "sku_num": "1",
+            "cart_price": "1.0", "sku_name": "w", "create_time": "t"}, ts=ts_s)
+
+    home = {"page_id": "home", "during_time": 1}
+    src_db = tmp_path / "src_db"; src_db.mkdir()
+    src_log = tmp_path / "src_log"; src_log.mkdir()
+    (src_db / "b0.json").write_text(cart("c1", "u1", day_s + 3))
+    (src_log / "b0.json").write_text("\n".join(
+        demo._log(f"mid{i}", "1", demo.DAY1 + 3_600_000 + i * 20_000, page=home)
+        for i in range(3)))
+    config = spark.createDataFrame([], schemas.TABLE_PROCESS_DIM)
+
+    def drain():
+        wh = Warehouse(spark, WarehousePaths(str(tmp_path / "wh")), lambda s: config)
+        wh.run_available_now(file_json_raw(spark, str(src_db)),
+                             file_json_raw(spark, str(src_log)))
+        return wh
+
+    drain()
+    (src_db / "b1.json").write_text("\n".join(
+        [cart("c2", "u2", day_s + 5), cart("c3", "u3", day_s + 60)]))
+    (src_log / "b1.json").write_text(
+        demo._log("mid9", "1", demo.DAY1 + 7_200_000, page=home))
+    wh = drain()
+    cu = {(r.stt.isoformat(), r.cart_add_uu_ct)
+          for r in wh.cart_uu_serving.read(spark).collect()}
+    assert ("2024-01-01T00:00:00", 2) in cu
 
 
 # --------------------------------------------------------------------------
