@@ -8,6 +8,10 @@ per group, state in the RocksDB store (scales past heap, unlike the
 reference's HashMap backend, BaseAPP.java:42).  Records are applied in
 event-time order within each batch, reproducing the reference's per-record
 sequencing.
+
+Each operator also has a ``*_batch`` twin for ``foreachBatch``: the same
+decision as a per-micro-batch set operation against a ``KeyedTable``, with
+no per-group Python and no state store (the warehouse runs these).
 """
 
 from __future__ import annotations
@@ -23,6 +27,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     IntegerType, LongType, StringType, StructField, StructType,
 )
+from pyspark.sql.window import Window
 
 _VISITOR_OUT = StructType(
     [
@@ -210,9 +215,8 @@ def first_seen(
     stateful op, so the TTL'd form cannot feed a windowed agg in the SAME
     query.  Pass None to chain op → window in one query (and bound state
     some other way); keep the default TTL when the flags feed a
-    sink/foreachBatch directly — the warehouse instead layers flags
-    through a DWD table (two queries), keeping both the TTL and the
-    windows.
+    sink/foreachBatch directly.  (The warehouse runs the set-based twin
+    ``first_seen_batch`` instead, which needs no watermark at all.)
 
     An input that already has a ``row_time`` column keeps it, and its
     watermark, as given; ``delay`` is then unused.  That is how a union
@@ -297,3 +301,62 @@ def visitor_fix_batch(batch: DataFrame, state, spark) -> DataFrame:
     fixed.count()
     eff.unpersist()
     return fixed
+
+
+def first_seen_batch(batch: DataFrame, state, spark, batch_id: int) -> DataFrame:
+    """Per-(key, day) first-seen flags as a per-micro-batch set operation
+    against a persistent state table — the batch twin of ``first_seen``,
+    used inside ``foreachBatch``: no per-group Python, no state store,
+    no watermark.
+
+    ``batch`` has columns (key, ts); ``dt`` is derived from ``ts`` as
+    ``first_seen`` derives it.  ``state`` is a ``KeyedTable`` keyed by
+    (key, dt), insert-only, with rows (key, dt, ts = first ts,
+    first_batch).  Within a (key, dt) the min-ts row of the batch gets
+    is_first=1 (ties broken by ``row_number``), unless the state already
+    holds that (key, dt).  Returns (key, dt, ts, is_first), one row per
+    input row.
+
+    Replay contract (as ``streaming/neardup.py``): entries an earlier
+    attempt of the SAME ``batch_id`` wrote are masked, and the TTL
+    horizon — the max first ts of the state before the batch minus
+    ``FIRST_SEEN_TTL_MS`` — comes from that masked state.  The flags are
+    therefore a pure function of (batch, state before the batch): a
+    replay recomputes them identically and rewrites the same entries.
+    Entries expire 36 h after first sight, more than the 24 h a day
+    spans; unlike ``first_seen`` no row is dropped as late (the
+    reference's keyed first-visit step drops none either).
+
+    Scale: the state merge rewrites only the buckets the batch's new
+    keys touch — the same cost as the visitor state.
+
+    The returned DataFrame is PERSISTED and materialized (it must not
+    lazily re-read the state the merge just rewrote); the caller
+    releases it."""
+    b = batch.select("key", "ts").withColumn(
+        "dt", F.date_format(F.timestamp_millis("ts"), "yyyy-MM-dd")
+    )
+    first = F.row_number().over(Window.partitionBy("key", "dt").orderBy("ts")) == 1
+    stored = state.read(spark)
+    if stored is None:
+        is_first = first
+    else:
+        top = stored.filter(F.col("first_batch") != batch_id).agg(F.max("ts")).first()[0]
+        if top is not None:
+            state.set_ttl_horizon(top - FIRST_SEEN_TTL_MS)
+        seen = (
+            state.read(spark)
+            .filter(F.col("first_batch") != batch_id)
+            .select("key", "dt", F.lit(True).alias("seen"))
+        )
+        b = b.join(seen, ["key", "dt"], "left")
+        is_first = first & F.col("seen").isNull()
+    flags = b.select("key", "dt", "ts", is_first.cast("int").alias("is_first")).persist()
+    flags.count()
+    state.merge(
+        spark,
+        flags.filter(F.col("is_first") == 1).select(
+            "key", "dt", "ts", F.lit(batch_id).cast("long").alias("first_batch")
+        ),
+    )
+    return flags

@@ -2,8 +2,8 @@
 (Constant.java:40-47), as Structured Streaming window aggs.
 
 Every table is `groupBy(window(row_time, size), dims).agg(...)` in append
-mode behind a watermark; the UU tables share one first-seen keyed-state
-op upstream, so each (source, key, day) contributes once.  All transforms
+mode behind a watermark; the UU tables share one first-seen flags
+step upstream, so each (source, key, day) contributes once.  All transforms
 also run on bounded frames (tests / backfill) unchanged.
 """
 
@@ -90,7 +90,8 @@ def is_uu_source(src: str) -> Column:
 
 def unique_users(first_seen_flags: DataFrame, size: str = WINDOW) -> DataFrame:
     """A3 + A6 — first-seen keys per window per source, from the
-    source-tagged flags of operators/state.first_seen: ``src`` "uv" is
+    source-tagged flags of operators/state.first_seen or its set-based
+    twin first_seen_batch (the warehouse's): ``src`` "uv" is
     the home/detail-page UV (Constant.java:42), "cart" the cart-add
     unique users (Constant.java:45).  Returns (stt, edt, src, uu_ct).
 

@@ -11,7 +11,11 @@ output as their own streams* — so windowed aggregations run as native
 Structured Streaming aggs with watermarks (cross-batch windows accumulate
 correctly; a foreachBatch-side agg would overwrite partial windows).
 
-All sinks are keyed MERGEs, so the whole graph is replay-idempotent.
+Replay: the keyed MERGE sinks (dim, order join, comment, visitor and
+first-seen state, serving tables) rewrite the same keys, and the flags
+query publishes one file per batch id, so a replayed batch of those
+converges to the same tables.  The DWD log routes and the cart_add
+stream are plain appends: a replayed ODS batch duplicates their rows.
 
 Watermark-advance delta vs Flink (documented semantic difference): Flink
 generates watermarks at the SOURCE, before any SQL filter, so every
@@ -23,18 +27,22 @@ Consequence: a window over a quiet table flushes on that table's next
 event (or the query's no-data batch) rather than on unrelated topic
 traffic.  Results converge identically; only emission latency differs.
 
-The unique-user chain unions inputs that each keep their own watermark
-(page keys and cart keys into the flags query; the per-source flag reads
-into the UU window query).  Spark's default ``min`` policy takes the
-slowest input's watermark, so a fast page stream never makes cart rows
+The unique-user window query (``dws_uu``) unions the per-source flag
+reads, each with its own watermark.  Spark's default ``min`` policy takes
+the slowest input's watermark, so a fast page stream never makes cart rows
 late — but a quiet input also holds every UU window open until it moves
 (an input that has no rows in a run holds the query's watermark where it
-stood).  That changes emission latency, not results.
+stood).  That changes emission latency, not results.  The flags query
+upstream of it is stateless (``first_seen_batch`` against a state table)
+and has no watermark, so it drops no row as late; the window query still
+drops rows more than 5 s behind its slowest source — the reference's
+keyed first-visit step likewise never drops late events, its window does.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -66,12 +74,15 @@ CART_ADD_SCHEMA = (
     "sku_num string, sku_name string, create_time string, ts long"
 )
 
-# first-seen flags DWD output (operators/state.first_seen)
+# first-seen flags DWD output (operators/state.first_seen_batch)
 FLAGS_SCHEMA = "key string, dt string, ts long, is_first int"
 
 # checkpoint dirs of the layout that ran one flags query and one window
 # query per unique-user table; Warehouse refuses a root that holds them
 OLD_UU_CHECKPOINTS = ("dwd_uv_flags", "dwd_cart_uu_flags", "dws_uv", "dws_cart_uu")
+# state dir of the flags checkpoint when the flags query ran the stateful
+# first_seen operator; Warehouse refuses a root that holds it
+OLD_FLAGS_STATE = os.path.join("dwd_flags", "state")
 
 
 def _watermarked(df: DataFrame) -> DataFrame:
@@ -81,6 +92,19 @@ def _watermarked(df: DataFrame) -> DataFrame:
     return df.withColumn("row_time", F.timestamp_millis("ts")).withWatermark(
         "row_time", "5 seconds"
     )
+
+
+def publish_batch(df: DataFrame, out_dir: str, batch_id: int) -> None:
+    """Write ``df`` into ``out_dir`` as exactly one parquet file named
+    after ``batch_id``, so a replayed batch overwrites its own file
+    instead of appending a duplicate.  The file is built under an
+    ``_``-prefixed dir, which file-stream readers skip, and moved in with
+    ``os.replace``, so a reader never lists a partial file."""
+    tmp = os.path.join(out_dir, f"_tmp_{batch_id}")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    (part,) = [f for f in os.listdir(tmp) if f.startswith("part-")]
+    os.replace(os.path.join(tmp, part), os.path.join(out_dir, f"batch-{batch_id:012d}.parquet"))
+    shutil.rmtree(tmp)
 
 
 @dataclass
@@ -124,6 +148,15 @@ class Warehouse:
         self.uv_serving = KeyedTable(os.path.join(paths.dws, "home_detail_uv"), keys=["stt"])
         self.cart_uu_serving = KeyedTable(os.path.join(paths.dws, "cart_add_uu"), keys=["stt"])
         self.flags_dir = os.path.join(paths.dwd, "first_seen_flags")
+        self.first_seen_state = KeyedTable(os.path.join(paths.state, "first_seen"), keys=["key", "dt"])
+        old_state = os.path.join(paths.ckpt, OLD_FLAGS_STATE)
+        if os.path.isdir(old_state):
+            raise RuntimeError(
+                f"warehouse root {paths.root} holds a checkpoint of the "
+                f"stateful first-seen flags query ({old_state}); the "
+                "set-based flags query cannot resume it — restart from a "
+                "fresh warehouse root (README, Upgrade notes)"
+            )
         old = [d for d in OLD_UU_CHECKPOINTS if os.path.isdir(os.path.join(paths.ckpt, d))]
         if old:
             raise RuntimeError(
@@ -178,37 +211,41 @@ class Warehouse:
         return dwd_log_foreach_batch(self.visitor_state, writers)
 
     # ---- DWD flags: one first-seen chain for every unique-user table ----
-    # The UU tables (A3 home/detail UV, A6 cart-add UU) share one
-    # first_seen query over source-tagged keys ("uv|<mid>",
-    # "cart|<user_id>").  The flags land in a DWD table that the DWS
-    # window query reads as its own stream, because Spark forbids a new
-    # watermark downstream of a watermarked stateful op: first_seen's
-    # event-time TTL and the windows cannot share one query.  This is
-    # the reference's job-per-layer topology (flags job ≈ DwdBaseLog
-    # keyed state; window job ≈ the planned DWS app).
-    def flags_queries(self, available_now: bool = True):
-        from ..operators.state import first_seen
+    # The UU tables (A3 home/detail UV, A6 cart-add UU) share one flags
+    # query over source-tagged keys ("uv|<mid>", "cart|<user_id>").  It is
+    # stateless: each micro-batch flags its rows with first_seen_batch
+    # against the first-seen state table and publishes them to a DWD
+    # table, which the DWS window query reads as its own stream — the
+    # reference's job-per-layer topology (flags job ≈ DwdBaseLog keyed
+    # state; window job ≈ the planned DWS app).
+    def flags_foreach_batch(self):
+        from ..operators.state import first_seen_batch
 
+        def fn(batch: DataFrame, batch_id: int) -> None:
+            flags = first_seen_batch(batch, self.first_seen_state, self.spark, batch_id)
+            try:
+                publish_batch(flags, self.flags_dir, batch_id)
+            finally:
+                flags.unpersist()
+
+        return fn
+
+    def flags_queries(self, available_now: bool = True):
         os.makedirs(self.paths.page_dir, exist_ok=True)
         os.makedirs(self.cart_add_dir, exist_ok=True)
+        os.makedirs(self.flags_dir, exist_ok=True)
         pages = self.spark.readStream.schema(PAGE_SCHEMA).parquet(self.paths.page_dir)
-        home_detail = _watermarked(
-            pages.filter(F.col("page.page_id").isin("home", "good_detail")).select(
-                dws.uu_key("uv", F.col("common.mid")).alias("key"), "ts"
-            )
+        home_detail = pages.filter(F.col("page.page_id").isin("home", "good_detail")).select(
+            dws.uu_key("uv", F.col("common.mid")).alias("key"), "ts"
         )
         carts = self.spark.readStream.schema(CART_ADD_SCHEMA).parquet(self.cart_add_dir)
-        cart_users = _watermarked(
-            carts.filter(F.col("user_id").isNotNull()).select(
-                dws.uu_key("cart", F.col("user_id")).alias("key"),
-                (F.col("ts") * 1000).alias("ts"),  # maxwell envelope ts is seconds
-            )
+        cart_users = carts.filter(F.col("user_id").isNotNull()).select(
+            dws.uu_key("cart", F.col("user_id")).alias("key"),
+            (F.col("ts") * 1000).alias("ts"),  # maxwell envelope ts is seconds
         )
         w = (
-            first_seen(home_detail.unionByName(cart_users))
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", self.flags_dir)
+            home_detail.unionByName(cart_users)
+            .writeStream.foreachBatch(self.flags_foreach_batch())
             .option("checkpointLocation", os.path.join(self.paths.ckpt, "dwd_flags"))
         )
         if available_now:

@@ -776,6 +776,14 @@ def test_full_warehouse_end_to_end(spark, tmp_path):
         schemas.TABLE_PROCESS_DIM,
     )
     wh = Warehouse(spark, WarehousePaths(str(tmp_path / "wh")), lambda s: config)
+    flags_handles = []
+    start_flags = wh.flags_queries
+
+    def keep_flags_handles(**kw):
+        flags_handles.extend(start_flags(**kw))
+        return flags_handles
+
+    wh.flags_queries = keep_flags_handles
     wh.run_available_now(file_json_raw(spark, str(src_db)), file_json_raw(spark, str(src_log)))
 
     # DIM
@@ -808,6 +816,11 @@ def test_full_warehouse_end_to_end(spark, tmp_path):
     assert set(os.listdir(wh.paths.ckpt)) == {
         "db", "log", "dwd_flags", "dws_kw", "dws_traffic", "dws_uu"}
     assert [d for d in os.listdir(wh.paths.dwd) if "flags" in d] == ["first_seen_flags"]
+    # the flags query is stateless: no state operator in any of its
+    # micro-batches (its first-seen state is a KeyedTable)
+    progress = [p for q in flags_handles for p in q.recentProgress]
+    assert progress and all(not p.stateOperators for p in progress)
+    assert wh.first_seen_state.read(spark).count() > 0
 
 
 def test_warehouse_refuses_old_uu_checkpoints(spark, tmp_path):
@@ -823,6 +836,20 @@ def test_warehouse_refuses_old_uu_checkpoints(spark, tmp_path):
         os.makedirs(os.path.join(paths.ckpt, name))
         with pytest.raises(RuntimeError, match=f"{name}.*fresh warehouse root"):
             Warehouse(spark, paths, lambda s: None)
+
+
+def test_warehouse_refuses_stateful_flags_checkpoint(spark, tmp_path):
+    """A root whose flags checkpoint holds the state dir of the stateful
+    first_seen query fails at construction, naming the dir and asking
+    for a fresh root."""
+    from flink_realtime_dw4_0_spark.streaming.warehouse import (
+        OLD_FLAGS_STATE, Warehouse, WarehousePaths,
+    )
+
+    paths = WarehousePaths(str(tmp_path / "wh"))
+    os.makedirs(os.path.join(paths.ckpt, OLD_FLAGS_STATE))
+    with pytest.raises(RuntimeError, match="dwd_flags/state.*fresh warehouse root"):
+        Warehouse(spark, paths, lambda s: None)
 
 
 def test_uu_windows_keep_per_source_watermarks(spark, tmp_path):
@@ -5337,6 +5364,87 @@ def test_first_seen_multibatch_golden(spark, tmp_path):
     assert len(flags) == 4  # k1 twice (two days), k2, k3 once each
 
 
+def test_first_seen_batch_equals_streaming_first_seen(spark, tmp_path):
+    """first_seen_batch, driven batch by batch against a state table,
+    flags every row exactly as the streaming first_seen operator does:
+    a key repeated across batches, tied ts values, a next-day re-flag
+    and an out-of-order earlier day."""
+    from flink_realtime_dw4_0_spark.operators.state import first_seen, first_seen_batch
+
+    H = 3_600_000
+    d1, d2 = DAY1 + 12 * H, DAY2 + 12 * H  # noon: one day whatever the zone
+    batches = [
+        [("k1", d1 + 5), ("k2", d1 + 6), ("k2", d1 + 6)],        # tied first ts
+        [("k1", d1 + 7), ("k1", d2 + 1), ("k3", d2 + 2),
+         ("k3", d2 + 2)],                                          # repeat, next day
+        [("k3", d1 + 4), ("k3", d2 + 3), ("k2", d1 + 6)],        # earlier day late
+    ]
+    _feed_files(tmp_path / "src", [
+        [json.dumps({"key": k, "ts": t}) for k, t in b] for b in batches
+    ])
+    stream = (spark.readStream.schema("key string, ts long")
+              .option("maxFilesPerTrigger", 1).json(str(tmp_path / "src")))
+    q = (
+        first_seen(stream).writeStream.format("memory").queryName("fs_golden")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination(120)
+    streamed = sorted(tuple(r) for r in spark.sql(
+        "SELECT key, dt, ts, is_first FROM fs_golden").collect())
+
+    state = KeyedTable(str(tmp_path / "state"), keys=["key", "dt"])
+    got = []
+    for bid, rows in enumerate(batches):
+        flags = first_seen_batch(
+            spark.createDataFrame(rows, "key string, ts long"), state, spark, bid)
+        got += [tuple(r) for r in flags.collect()]
+        flags.unpersist()
+    assert sorted(got) == streamed
+    firsts = sorted((k, t) for k, _dt, t, f in streamed if f)
+    assert firsts == [("k1", d1 + 5), ("k1", d2 + 1), ("k2", d1 + 6),
+                      ("k3", d1 + 4), ("k3", d2 + 2)]
+
+
+def test_flags_batch_replay_publishes_one_file(spark, tmp_path):
+    """Re-running the warehouse's flags body with one batch_id — the
+    state already holding that batch's own entries — republishes the
+    same rows to the same single file and leaves the state as it was.
+    Batch 1 raises the state's max first ts by 39 h: only because the
+    TTL horizon comes from the state BEFORE the batch does m1's day
+    entry stay live on the replay.  Batch 2 then finds it expired."""
+    from flink_realtime_dw4_0_spark.streaming.warehouse import (
+        FLAGS_SCHEMA, Warehouse, WarehousePaths,
+    )
+
+    wh = Warehouse(spark, WarehousePaths(str(tmp_path / "wh")), lambda s: None)
+    body = wh.flags_foreach_batch()
+    H = 3_600_000
+
+    def run(bid, rows):
+        body(spark.createDataFrame(rows, "key string, ts long"), bid)
+
+    def snapshot():
+        flags = spark.read.schema(FLAGS_SCHEMA).parquet(wh.flags_dir).collect()
+        st = wh.first_seen_state.read(spark).collect()
+        return (sorted(os.listdir(wh.flags_dir)), sorted(tuple(r) for r in flags),
+                sorted(tuple(r) for r in st))
+
+    run(0, [("uv|m1", DAY1 + H)])
+    run(1, [("uv|m1", DAY1 + 2 * H), ("cart|u1", DAY1 + 40 * H)])
+    once = snapshot()
+    run(1, [("uv|m1", DAY1 + 2 * H), ("cart|u1", DAY1 + 40 * H)])
+    assert snapshot() == once
+    files, flags, _ = once
+    assert files == ["batch-000000000000.parquet", "batch-000000000001.parquet"]
+    assert {(k, t): f for k, _dt, t, f in flags} == {
+        ("uv|m1", DAY1 + H): 1, ("uv|m1", DAY1 + 2 * H): 0, ("cart|u1", DAY1 + 40 * H): 1}
+    # horizon = DAY1 + 40 h - 36 h: m1's entry (first ts DAY1 + 1 h) expired
+    run(2, [("uv|m1", DAY1 + 3 * H)])
+    late = spark.read.parquet(os.path.join(wh.flags_dir, "batch-000000000002.parquet"))
+    assert [tuple(r) for r in late.select("key", "is_first").collect()] == [("uv|m1", 1)]
+
+
 def test_streaming_reservoir_equals_batch(spark, tmp_path):
     """Streaming reservoir changelog converges to the batch operator:
     drive the deterministic-hash reservoir over multi-batch keyed
@@ -5610,7 +5718,10 @@ def _drive_restart_foreach(spark, tmp_path, name, make_op, schema, batches,
     Spark's state store, so the process boundary is a brand-NEW operator
     instance (fresh KeyedTable handles) + a brand-new query on the SAME
     checkpoint and state paths.  Same shape as `_drive_restart`
-    otherwise: interrupted run vs uninterrupted twin, outputs compared."""
+    otherwise: interrupted run vs uninterrupted twin, outputs compared.
+    ``make_op(state_path)`` returns an object with
+    ``process_batch(batch, spark)``, or a function ``(batch, batch_id)``
+    for an operator whose replay contract keys on the batch id."""
     import json as _json
 
     def write_files(src, upto):
@@ -5633,7 +5744,10 @@ def _drive_restart_foreach(spark, tmp_path, name, make_op, schema, batches,
         )
 
         def fb(batch, batch_id):
-            res = op.process_batch(batch, batch.sparkSession)
+            if callable(op):
+                res = op(batch, batch_id)
+            else:
+                res = op.process_batch(batch, batch.sparkSession)
             res.select(*out_cols).write.mode("append").parquet(str(out))
 
         q = (
@@ -5659,7 +5773,7 @@ def _drive_restart_foreach(spark, tmp_path, name, make_op, schema, batches,
 
 @pytest.mark.parametrize("op", ["cep_seq", "cep_pattern_loop",
                                 "rate_limit", "visitor_fix", "first_seen",
-                                "topn", "neardup", "reservoir",
+                                "first_seen_batch", "topn", "neardup", "reservoir",
                                 "weighted_reservoir", "mr_measures",
                                 "followed_by_any", "combinations",
                                 "mr_nested"])
@@ -5736,6 +5850,34 @@ def test_checkpoint_restart_equals_uninterrupted(spark, tmp_path, op):
         assert restarted == uninterrupted and len(uninterrupted) > 0
         d = {r[0]: (r[1], r[2]) for r in uninterrupted}
         assert d[10] == (0, 1) and d[12] == (0, 2) and d[11] == (1, None)
+        return
+
+    if op == "first_seen_batch":
+        # the set-based twin keeps its first-seen entries in a KeyedTable:
+        # after the restart k1 (seen before it) must not re-flag
+        from flink_realtime_dw4_0_spark.operators.state import first_seen_batch
+
+        DAY = 86_400_000
+        batches = [
+            [{"user_id": "k1", "ts": base}, {"user_id": "k2", "ts": base + 1}],
+            [{"user_id": "k1", "ts": base + 2}, {"user_id": "k3", "ts": base + 3}],
+            # ---- restart happens here: k1, k2, k3 in the state table ----
+            [{"user_id": "k1", "ts": base + 4}, {"user_id": "k1", "ts": base + DAY}],
+        ]
+
+        def make_op(st):
+            state = KeyedTable(st, keys=["key", "dt"])
+            return lambda batch, bid: first_seen_batch(
+                batch.select(F.col("user_id").alias("key"), "ts"), state,
+                batch.sparkSession, bid)
+
+        restarted, uninterrupted = _drive_restart_foreach(
+            spark, tmp_path, "ckr_fsb", make_op, "user_id string, ts long",
+            batches, split=2, out_cols=["key", "dt", "ts", "is_first"],
+        )
+        assert restarted == uninterrupted
+        flagged = {(k, t - base) for k, _dt, t, f in uninterrupted if f}
+        assert flagged == {("k1", 0), ("k2", 1), ("k3", 3), ("k1", DAY)}
         return
 
     def ev(u, t_s, eid, et):
