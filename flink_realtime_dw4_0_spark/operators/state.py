@@ -317,18 +317,30 @@ def first_seen_batch(batch: DataFrame, state, spark, batch_id: int) -> DataFrame
     holds that (key, dt).  Returns (key, dt, ts, is_first), one row per
     input row.
 
-    Replay contract (as ``streaming/neardup.py``): entries an earlier
-    attempt of the SAME ``batch_id`` wrote are masked, and the TTL
-    horizon — the max first ts of the state before the batch minus
-    ``FIRST_SEEN_TTL_MS`` — comes from that masked state.  The flags are
-    therefore a pure function of (batch, state before the batch): a
-    replay recomputes them identically and rewrites the same entries.
-    Entries expire 36 h after first sight, more than the 24 h a day
-    spans; unlike ``first_seen`` no row is dropped as late (the
-    reference's keyed first-visit step drops none either).
+    TTL horizon, one per source: a key tagged ``<source>|...`` (as
+    ``streaming/dws.uu_key`` tags them; an untagged key is source "")
+    belongs to that source.  The horizon is the MIN over sources of each
+    source's max first ts, minus ``FIRST_SEEN_TTL_MS`` — Spark's ``min``
+    watermark policy, so a source that runs ahead never expires the
+    entries of one that lags, and a quiet source holds the horizon (and
+    the state) where it stood.  Entries expire 36 h after first sight by
+    their slowest source's clock, more than the 24 h a day spans; unlike
+    ``first_seen`` no row is dropped as late (the reference's keyed
+    first-visit step drops none either).
 
-    Scale: the state merge rewrites only the buckets the batch's new
-    keys touch — the same cost as the visitor state.
+    Replay contract (as ``streaming/neardup.py``): entries an earlier
+    attempt of the SAME ``batch_id`` wrote are masked, and the horizon
+    comes from that masked state, read raw (a merge drops physically
+    only entries below the horizon it ran under, never a source's
+    latest).  The flags are therefore a pure function of (batch, state
+    before the batch): a replay recomputes them identically and
+    rewrites the same entries.
+
+    Scale: every batch reads the whole state table twice — one
+    aggregate job for the horizon and the join — so that cost is
+    O(total state), not O(batch keys); only the merge is bounded (it
+    rewrites the buckets the batch's new keys touch, as the visitor
+    state's does).
 
     The returned DataFrame is PERSISTED and materialized (it must not
     lazily re-read the state the merge just rewrote); the caller
@@ -337,18 +349,22 @@ def first_seen_batch(batch: DataFrame, state, spark, batch_id: int) -> DataFrame
         "dt", F.date_format(F.timestamp_millis("ts"), "yyyy-MM-dd")
     )
     first = F.row_number().over(Window.partitionBy("key", "dt").orderBy("ts")) == 1
-    stored = state.read(spark)
+    stored = state.read_version(spark)  # raw: the horizon is recomputed
     if stored is None:
         is_first = first
     else:
-        top = stored.filter(F.col("first_batch") != batch_id).agg(F.max("ts")).first()[0]
-        if top is not None:
-            state.set_ttl_horizon(top - FIRST_SEEN_TTL_MS)
-        seen = (
-            state.read(spark)
-            .filter(F.col("first_batch") != batch_id)
-            .select("key", "dt", F.lit(True).alias("seen"))
+        prior = stored.filter(F.col("first_batch") != batch_id)
+        top = (
+            prior.groupBy(F.regexp_extract("key", r"^([^|]*)\|", 1))
+            .agg(F.max("ts").alias("top"))
+            .agg(F.min("top"))
+            .first()[0]
         )
+        if top is not None:
+            horizon = top - FIRST_SEEN_TTL_MS
+            state.set_ttl_horizon(horizon)
+            prior = prior.filter(F.col("ts") >= horizon)
+        seen = prior.select("key", "dt", F.lit(True).alias("seen"))
         b = b.join(seen, ["key", "dt"], "left")
         is_first = first & F.col("seen").isNull()
     flags = b.select("key", "dt", "ts", is_first.cast("int").alias("is_first")).persist()

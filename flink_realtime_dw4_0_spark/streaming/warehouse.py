@@ -34,9 +34,12 @@ late — but a quiet input also holds every UU window open until it moves
 (an input that has no rows in a run holds the query's watermark where it
 stood).  That changes emission latency, not results.  The flags query
 upstream of it is stateless (``first_seen_batch`` against a state table)
-and has no watermark, so it drops no row as late; the window query still
-drops rows more than 5 s behind its slowest source — the reference's
-keyed first-visit step likewise never drops late events, its window does.
+and has no watermark, so it drops no row as late; its state TTL follows
+the slowest source by the same ``min`` rule, so a lagging source keeps
+its first-seen entries however far ahead the other runs.  The window
+query still drops rows more than 5 s behind its slowest source — the
+reference's keyed first-visit step likewise never drops late events,
+its window does.
 """
 
 from __future__ import annotations
@@ -77,12 +80,13 @@ CART_ADD_SCHEMA = (
 # first-seen flags DWD output (operators/state.first_seen_batch)
 FLAGS_SCHEMA = "key string, dt string, ts long, is_first int"
 
-# checkpoint dirs of the layout that ran one flags query and one window
-# query per unique-user table; Warehouse refuses a root that holds them
-OLD_UU_CHECKPOINTS = ("dwd_uv_flags", "dwd_cart_uu_flags", "dws_uv", "dws_cart_uu")
-# state dir of the flags checkpoint when the flags query ran the stateful
-# first_seen operator; Warehouse refuses a root that holds it
-OLD_FLAGS_STATE = os.path.join("dwd_flags", "state")
+# checkpoint dirs that only older warehouse layouts write: one flags
+# query and one window query per unique-user table, and the state of the
+# stateful first-seen flags query; Warehouse refuses a root that holds them
+OLD_CHECKPOINTS = (
+    "dwd_uv_flags", "dwd_cart_uu_flags", "dws_uv", "dws_cart_uu",
+    os.path.join("dwd_flags", "state"),
+)
 
 
 def _watermarked(df: DataFrame) -> DataFrame:
@@ -149,21 +153,13 @@ class Warehouse:
         self.cart_uu_serving = KeyedTable(os.path.join(paths.dws, "cart_add_uu"), keys=["stt"])
         self.flags_dir = os.path.join(paths.dwd, "first_seen_flags")
         self.first_seen_state = KeyedTable(os.path.join(paths.state, "first_seen"), keys=["key", "dt"])
-        old_state = os.path.join(paths.ckpt, OLD_FLAGS_STATE)
-        if os.path.isdir(old_state):
-            raise RuntimeError(
-                f"warehouse root {paths.root} holds a checkpoint of the "
-                f"stateful first-seen flags query ({old_state}); the "
-                "set-based flags query cannot resume it — restart from a "
-                "fresh warehouse root (README, Upgrade notes)"
-            )
-        old = [d for d in OLD_UU_CHECKPOINTS if os.path.isdir(os.path.join(paths.ckpt, d))]
+        old = [d for d in OLD_CHECKPOINTS if os.path.isdir(os.path.join(paths.ckpt, d))]
         if old:
             raise RuntimeError(
-                f"warehouse root {paths.root} holds checkpoints of the old "
-                f"two-chain unique-user layout ({', '.join(old)}); the merged "
-                "first-seen chain cannot resume them — restart from a fresh "
-                "warehouse root (README, Upgrade notes)"
+                f"warehouse root {paths.root} holds checkpoints of an older "
+                f"warehouse layout ({', '.join(old)}) that this one cannot "
+                "resume — restart from a fresh warehouse root (README, "
+                "Upgrade notes)"
             )
 
     # ---- DWD (db side): one foreachBatch handles dim + trade facts ------

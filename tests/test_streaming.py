@@ -824,43 +824,34 @@ def test_full_warehouse_end_to_end(spark, tmp_path):
 
 
 def test_warehouse_refuses_old_uu_checkpoints(spark, tmp_path):
-    """A root written by the layout with one flags query and one window
-    query per unique-user table fails at construction, naming the old
-    checkpoints and asking for a fresh root."""
+    """A root written by an older layout (one flags query and one window
+    query per unique-user table, or the stateful first-seen flags query)
+    fails at construction, naming the old checkpoint and asking for a
+    fresh root."""
     from flink_realtime_dw4_0_spark.streaming.warehouse import (
-        OLD_UU_CHECKPOINTS, Warehouse, WarehousePaths,
+        OLD_CHECKPOINTS, Warehouse, WarehousePaths,
     )
 
-    for name in OLD_UU_CHECKPOINTS:
+    for name in OLD_CHECKPOINTS:
         paths = WarehousePaths(str(tmp_path / name))
         os.makedirs(os.path.join(paths.ckpt, name))
         with pytest.raises(RuntimeError, match=f"{name}.*fresh warehouse root"):
             Warehouse(spark, paths, lambda s: None)
 
 
-def test_warehouse_refuses_stateful_flags_checkpoint(spark, tmp_path):
-    """A root whose flags checkpoint holds the state dir of the stateful
-    first_seen query fails at construction, naming the dir and asking
-    for a fresh root."""
-    from flink_realtime_dw4_0_spark.streaming.warehouse import (
-        OLD_FLAGS_STATE, Warehouse, WarehousePaths,
-    )
-
-    paths = WarehousePaths(str(tmp_path / "wh"))
-    os.makedirs(os.path.join(paths.ckpt, OLD_FLAGS_STATE))
-    with pytest.raises(RuntimeError, match="dwd_flags/state.*fresh warehouse root"):
-        Warehouse(spark, paths, lambda s: None)
-
-
 def test_uu_windows_keep_per_source_watermarks(spark, tmp_path):
     """Cart-add UU stays exact when the page stream runs far ahead.
 
-    Drain 1 sees page events about an hour past its only cart event.
-    Drain 2 (same root, resumed from the checkpoints) adds a cart for a
-    new user 2 s after the first, plus a later cart that closes their
-    window.  With one watermark per source the page stream never makes
-    the second cart late, so the window counts both users; one watermark
-    shared by both sources would have dropped it.
+    Drain 1 sees page events 48 h past its only cart event — further
+    ahead than the 36 h first-seen TTL.  Drain 2 (same root, resumed
+    from the checkpoints) adds a cart for a new user 2 s after the
+    first, a repeat of the first user, and a later cart that closes
+    their window.  With one watermark per source the page stream never
+    makes the second cart late, so the window counts both users; one
+    watermark shared by both sources would have dropped it.  The
+    first-seen TTL horizon follows the slowest source the same way, so
+    the first user's entry stays live and the repeat is not counted; a
+    horizon taken from the page stream would count the user twice.
 
     Drain 2 also carries a page event: a resumed query counts an input
     that has no rows in the run at the restored watermark, so without
@@ -882,7 +873,7 @@ def test_uu_windows_keep_per_source_watermarks(spark, tmp_path):
     src_log = tmp_path / "src_log"; src_log.mkdir()
     (src_db / "b0.json").write_text(cart("c1", "u1", day_s + 3))
     (src_log / "b0.json").write_text("\n".join(
-        demo._log(f"mid{i}", "1", demo.DAY1 + 3_600_000 + i * 20_000, page=home)
+        demo._log(f"mid{i}", "1", demo.DAY1 + 48 * 3_600_000 + i * 20_000, page=home)
         for i in range(3)))
     config = spark.createDataFrame([], schemas.TABLE_PROCESS_DIM)
 
@@ -894,9 +885,10 @@ def test_uu_windows_keep_per_source_watermarks(spark, tmp_path):
 
     drain()
     (src_db / "b1.json").write_text("\n".join(
-        [cart("c2", "u2", day_s + 5), cart("c3", "u3", day_s + 60)]))
+        [cart("c2", "u2", day_s + 5), cart("c4", "u1", day_s + 6),
+         cart("c3", "u3", day_s + 60)]))
     (src_log / "b1.json").write_text(
-        demo._log("mid9", "1", demo.DAY1 + 7_200_000, page=home))
+        demo._log("mid9", "1", demo.DAY1 + 49 * 3_600_000, page=home))
     wh = drain()
     cu = {(r.stt.isoformat(), r.cart_add_uu_ct)
           for r in wh.cart_uu_serving.read(spark).collect()}
@@ -5410,8 +5402,8 @@ def test_flags_batch_replay_publishes_one_file(spark, tmp_path):
     """Re-running the warehouse's flags body with one batch_id — the
     state already holding that batch's own entries — republishes the
     same rows to the same single file and leaves the state as it was.
-    Batch 1 raises the state's max first ts by 39 h: only because the
-    TTL horizon comes from the state BEFORE the batch does m1's day
+    Batch 1 raises the uv source's max first ts by 39 h: only because
+    the TTL horizon comes from the state BEFORE the batch does m1's day
     entry stay live on the replay.  Batch 2 then finds it expired."""
     from flink_realtime_dw4_0_spark.streaming.warehouse import (
         FLAGS_SCHEMA, Warehouse, WarehousePaths,
@@ -5431,18 +5423,39 @@ def test_flags_batch_replay_publishes_one_file(spark, tmp_path):
                 sorted(tuple(r) for r in st))
 
     run(0, [("uv|m1", DAY1 + H)])
-    run(1, [("uv|m1", DAY1 + 2 * H), ("cart|u1", DAY1 + 40 * H)])
+    run(1, [("uv|m1", DAY1 + 2 * H), ("uv|m2", DAY1 + 40 * H)])
     once = snapshot()
-    run(1, [("uv|m1", DAY1 + 2 * H), ("cart|u1", DAY1 + 40 * H)])
+    run(1, [("uv|m1", DAY1 + 2 * H), ("uv|m2", DAY1 + 40 * H)])
     assert snapshot() == once
     files, flags, _ = once
     assert files == ["batch-000000000000.parquet", "batch-000000000001.parquet"]
     assert {(k, t): f for k, _dt, t, f in flags} == {
-        ("uv|m1", DAY1 + H): 1, ("uv|m1", DAY1 + 2 * H): 0, ("cart|u1", DAY1 + 40 * H): 1}
+        ("uv|m1", DAY1 + H): 1, ("uv|m1", DAY1 + 2 * H): 0, ("uv|m2", DAY1 + 40 * H): 1}
     # horizon = DAY1 + 40 h - 36 h: m1's entry (first ts DAY1 + 1 h) expired
     run(2, [("uv|m1", DAY1 + 3 * H)])
     late = spark.read.parquet(os.path.join(wh.flags_dir, "batch-000000000002.parquet"))
     assert [tuple(r) for r in late.select("key", "is_first").collect()] == [("uv|m1", 1)]
+
+
+def test_first_seen_batch_horizon_waits_for_a_late_source(spark, tmp_path):
+    """A source whose first rows arrive behind the TTL horizon the other
+    source set lowers it: its entries count from the next batch on, so a
+    repeat of its key is not flagged again."""
+    from flink_realtime_dw4_0_spark.operators.state import first_seen_batch
+
+    H = 3_600_000
+    state = KeyedTable(str(tmp_path / "state"), keys=["key", "dt"])
+
+    def run(bid, rows):
+        flags = first_seen_batch(
+            spark.createDataFrame(rows, "key string, ts long"), state, spark, bid)
+        out = [(r.key, r.is_first) for r in flags.collect()]
+        flags.unpersist()
+        return out
+
+    run(0, [("uv|m1", DAY1 + 48 * H)])
+    assert run(1, [("cart|u1", DAY1 + H)]) == [("cart|u1", 1)]
+    assert run(2, [("cart|u1", DAY1 + 2 * H)]) == [("cart|u1", 0)]
 
 
 def test_streaming_reservoir_equals_batch(spark, tmp_path):
