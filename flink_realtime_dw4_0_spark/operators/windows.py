@@ -10,12 +10,22 @@ aggregation (map-side combine) happens automatically.  Distinct-user
 counts use exact count_distinct in batch and first-seen keyed state in
 streaming (operators/state.py); at 100 TB prefer approx_count_distinct
 when the serving table tolerates ~2% error.
+
+``append_window_batch`` is the set-based twin of a streaming append-mode
+tumbling window: the same closed windows, computed inside
+``foreachBatch`` against a table of open-window partials, with no state
+store and no no-data batch.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import json
+import os
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sinks.upsert import KeyedTable
 
 
 _UNIT_SECONDS = {
@@ -222,3 +232,165 @@ def cumulate_rollup(
     # drop cumulative windows whose prefix has no data yet (they have no
     # twin in windowed_agg_cumulate either)
     return _finish(rolled.filter(F.col("__seen") > 0).drop("__seen"), "__anchor", "__end")
+
+
+class OpenWindows:
+    """The state of ``append_window_batch`` under one directory:
+
+    * ``partials`` — a ``KeyedTable`` of per-batch partial aggregates
+      (stt, edt, dims, sums, batch), insert-only, keyed by the batch id
+      and a ``slot`` string naming (window start, dims) null-safely;
+      its TTL column is the window end, so expired windows vanish from
+      reads at once and from disk when their bucket is next rewritten;
+    * ``log/`` — one small JSON entry per batch id: the watermarks the
+      batch ran under and produced, the per-source max event times
+      before and after it, and the rows it dropped as late.  Entries
+      are replaced atomically; only the last ``KEEP_LOG`` are kept (a
+      replay reads the entry of the batch before it)."""
+
+    KEEP_LOG = 8
+
+    def __init__(self, path: str):
+        self.partials = KeyedTable(
+            os.path.join(path, "partials"), keys=["batch", "slot"], ttl_col="edt"
+        )
+        self.log_dir = os.path.join(path, "log")
+
+    def _ids(self) -> list[int]:
+        if not os.path.isdir(self.log_dir):
+            return []
+        return sorted(
+            int(f[len("batch-"):-len(".json")])
+            for f in os.listdir(self.log_dir)
+            if f.startswith("batch-") and f.endswith(".json")
+        )
+
+    def _file(self, batch_id: int) -> str:
+        return os.path.join(self.log_dir, f"batch-{batch_id:012d}.json")
+
+    def entry(self, batch_id: int | None = None, before: bool = False) -> dict | None:
+        """The log entry of ``batch_id`` (the latest when None); with
+        ``before``, the latest entry of an EARLIER batch instead."""
+        ids = self._ids()
+        if batch_id is not None:
+            ids = [i for i in ids if i < batch_id] if before else [i for i in ids if i == batch_id]
+        if not ids:
+            return None
+        with open(self._file(ids[-1])) as fh:
+            return json.load(fh)
+
+    def write(self, entry: dict) -> None:
+        os.makedirs(self.log_dir, exist_ok=True)
+        f = self._file(entry["batch"])
+        with open(f + ".tmp", "w") as fh:
+            json.dump(entry, fh, sort_keys=True)
+        os.replace(f + ".tmp", f)
+        for i in self._ids()[: -self.KEEP_LOG]:
+            os.remove(self._file(i))
+
+
+def append_window_batch(
+    spark: SparkSession,
+    batch_id: int,
+    state: OpenWindows,
+    rows: DataFrame,
+    dims: list[str],
+    sums: list[str],
+    size: str,
+    delay: str,
+    events: DataFrame | None = None,
+    sources: dict[str, Column] | None = None,
+) -> DataFrame:
+    """One micro-batch of an append-mode tumbling-window aggregation
+    (``groupBy(window(row_time, size), *dims)`` behind
+    ``withWatermark("row_time", delay)``) as a set operation against
+    ``state`` — used inside ``foreachBatch``.  Returns the closed
+    windows this batch (re)computes: (stt, edt, *dims, *sums).
+
+    ``rows`` has ``row_time`` (timestamp), the ``dims`` and one column
+    per name in ``sums``: every measure is a SUM of per-row values (a
+    count sums a literal 1), so partials from different batches add up.
+    ``events`` (default ``rows``) are the rows that advance the
+    watermark — Spark computes it at the watermark node, below filters
+    Catalyst pushes through it but above an explode, so the caller
+    passes what reaches that node.  ``sources`` names the inputs of a
+    union that each carried their own watermark, as predicates over
+    ``events`` (default: one input).
+
+    Watermark, as Spark's: W_k, the watermark batch k runs under, is
+    max(W_(k-1), min over sources of (max event time - delay)) over the
+    events of batches before k; a source with no event yet counts as 0
+    (Spark's ``min`` policy holds a query at an input it has not seen),
+    and W_0 = 0.  The per-source maxima persist in the log, so after a
+    restart a quiet source keeps its max, where a resumed Spark query
+    holds its restored watermark until every input has rows again
+    (earlier emission here, same windows).  A row is dropped as late iff its window ends at or
+    before W_(k-1), the previous batch's watermark (Spark filters late
+    rows against it, and evicts against W_k).  Batch k emits every
+    window with W_(k-1) < end <= W_(k+1): what Spark's batch k emits
+    plus what its trailing no-data batch would, so after the last batch
+    of a drain the emitted windows equal Spark's; an earlier emission of
+    a window that a later batch adds rows to is re-emitted with them (a
+    serving upsert converges).  One difference remains: a row landing
+    in a window with W_k < end <= W_(k+1) in the NEXT drain is accepted
+    here and the window is emitted again, where Spark's no-data batch
+    at the end of the drain had closed it and would drop the row.
+
+    State: this batch's partials are merged under (batch_id, slot), so a
+    replay rewrites its own earlier rows; the TTL horizon drops windows
+    that end at or before W_(k-1) — no later row can reach them — so the
+    table holds open windows, not history.  The log entry of batch k
+    derives from the entry of the batch before it, never its own, and
+    the partials it reads are this batch's plus earlier ones above the
+    horizon: a replay recomputes identical output, entry and state.
+
+    Jobs: one aggregate over ``events`` (per-source max event time and
+    the late-row count), the partials merge, and the caller's reads of
+    the returned windows."""
+    duration_seconds(size)  # whole seconds: the TTL below compares them
+    delay_ms = duration_seconds(delay) * 1000
+    events = rows if events is None else events
+    if sources is None:
+        sources = {"": F.lit(True)}
+    prev = state.entry(batch_id, before=True) or {
+        "watermark_ms": 0, "next_watermark_ms": 0, "max_event_ms_after": {}
+    }
+    late, wm = prev["watermark_ms"], prev["next_watermark_ms"]
+    before = {s: prev["max_event_ms_after"].get(s) for s in sources}
+
+    def end_ms(df: DataFrame) -> Column:
+        return F.unix_millis(F.window(df["row_time"], size).end)
+
+    stats = events.agg(
+        *[F.max(F.when(p, F.unix_millis("row_time"))).alias(f"max{i}")
+          for i, p in enumerate(sources.values())],
+        F.count_if(end_ms(events) <= late).alias("late"),
+    ).first()
+    after = {
+        s: max((v for v in (before[s], stats[f"max{i}"]) if v is not None), default=None)
+        for i, s in enumerate(sources)
+    }
+    nxt = max(wm, min((0 if m is None else m - delay_ms) for m in after.values()))
+    state.write({
+        "batch": batch_id, "late_watermark_ms": late, "watermark_ms": wm,
+        "next_watermark_ms": nxt, "max_event_ms_before": before,
+        "max_event_ms_after": after, "rows_dropped_late": stats["late"],
+    })
+
+    w = F.window("row_time", size)
+    partials = (
+        rows.filter(end_ms(rows) > late)
+        .groupBy(w.start.alias("stt"), w.end.alias("edt"), *dims)
+        .agg(*[F.sum(c).alias(c) for c in sums])
+        .withColumn("batch", F.lit(batch_id).cast("long"))
+        .withColumn("slot", F.to_json(F.struct(F.unix_millis("stt").alias("stt"), *dims)))
+    )
+    # window ends are whole seconds and the TTL compares edt as epoch
+    # seconds: keep edt > late
+    state.partials.set_ttl_horizon(late // 1000 + 1)
+    state.partials.merge(spark, partials)
+    stored = state.partials.read(spark)
+    closed = (partials if stored is None else stored).filter(
+        F.unix_millis("edt") <= nxt
+    )
+    return closed.groupBy("stt", "edt", *dims).agg(*[F.sum(c).alias(c) for c in sums])

@@ -97,7 +97,9 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # streaming state: RocksDB scales past heap (reference uses a heap
         # HashMap backend, BaseAPP.java:42 — fine at parallelism 4, not at
-        # 1000 executors).
+        # 1000 executors).  Only the library's stateful operators load it:
+        # the warehouse's queries are stateless (KeyedTable state), so a
+        # warehouse-only process never extracts the RocksDB JNI library.
         .config(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",

@@ -5,6 +5,11 @@ Every table is `groupBy(window(row_time, size), dims).agg(...)` in append
 mode behind a watermark; the UU tables share one first-seen flags
 step upstream, so each (source, key, day) contributes once.  All transforms
 also run on bounded frames (tests / backfill) unchanged.
+
+The warehouse runs A1, A2 and A3/A6 through their ``*_windows`` twins
+instead: one ``foreachBatch`` step each over the DWD stream's batch,
+``operators/windows.append_window_batch`` against an ``OpenWindows``
+state, emitting the same closed windows with no state store.
 """
 
 from __future__ import annotations
@@ -12,8 +17,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.windows import OpenWindows, append_window_batch
+
 
 WINDOW = "10 seconds"  # the classic gmall DWS tumbling size
+DELAY = "5 seconds"  # the warehouse's watermark delay
+UU_SOURCES = ("uv", "cart")  # the source tags of the unique-user keys
 
 
 def _win(df: DataFrame, size: str, *dims: Column | str):
@@ -28,6 +37,22 @@ def _flat(df: DataFrame) -> DataFrame:
     ).drop("w")
 
 
+def _search_pages(page_log: DataFrame) -> DataFrame:
+    return page_log.filter(
+        (F.col("page.last_page_id") == "search") & F.col("page.item").isNotNull()
+    )
+
+
+def _keywords(search: DataFrame, tokenizer=None) -> DataFrame:
+    """(row_time, keyword): one row per token of each search's item."""
+    from ..operators.split import explode_computed
+    from ..operators.text import tokenize_keywords
+
+    if tokenizer is None:
+        tokenizer = tokenize_keywords
+    return explode_computed(search, ["row_time"], tokenizer(F.col("page.item")), "keyword")
+
+
 def keyword_page_view(page_log: DataFrame, size: str = WINDOW, tokenizer=None) -> DataFrame:
     """A1 — dws_traffic_source_keyword_page_view_window: tokenize search
     keyword, count per keyword per window (Constant.java:40, X13 UDTF —
@@ -39,40 +64,33 @@ def keyword_page_view(page_log: DataFrame, size: str = WINDOW, tokenizer=None) -
     `tokenize_keywords_dict` / `tokenize_keywords_jieba` plug in
     unchanged — the window/explode/count plumbing is segmenter-agnostic.
     """
-    from ..operators.split import explode_computed
-    from ..operators.text import tokenize_keywords
-
-    if tokenizer is None:
-        tokenizer = tokenize_keywords
-    kw = explode_computed(
-        page_log.filter(
-            (F.col("page.last_page_id") == "search") & F.col("page.item").isNotNull()
-        ),
-        ["row_time"],
-        tokenizer(F.col("page.item")),
-        "keyword",
-    )
+    kw = _keywords(_search_pages(page_log), tokenizer)
     out = _win(kw, size, "keyword").agg(F.count(F.lit(1)).alias("keyword_count"))
     return _flat(out)
+
+
+TRAFFIC_DIMS = ["vc", "ch", "ar", "is_new"]
+
+
+def _traffic_rows(page_log: DataFrame) -> DataFrame:
+    """(row_time, vc, ch, ar, is_new, pv_ct, sv_ct, dur_sum): each page's
+    contribution to A2's measures, which are all sums of these."""
+    return page_log.select(
+        "row_time",
+        *[F.col(f"common.{d}").alias(d) for d in TRAFFIC_DIMS],
+        F.lit(1).alias("pv_ct"),
+        F.when(F.col("page.last_page_id").isNull(), 1).otherwise(0).alias("sv_ct"),
+        F.col("page.during_time").alias("dur_sum"),
+    )
 
 
 def traffic_vc_ch_ar_is_new(page_log: DataFrame, size: str = WINDOW) -> DataFrame:
     """A2 — per (vc, ch, ar, is_new): PV, session count, duration sum
     (Constant.java:41)."""
-    p = page_log.select(
-        "row_time",
-        F.col("common.vc").alias("vc"),
-        F.col("common.ch").alias("ch"),
-        F.col("common.ar").alias("ar"),
-        F.col("common.is_new").alias("is_new"),
-        F.col("common.sid").alias("sid"),
-        F.col("page.during_time").alias("during_time"),
-        F.col("page.last_page_id").alias("last_page_id"),
-    )
-    out = _win(p, size, "vc", "ch", "ar", "is_new").agg(
+    out = _win(_traffic_rows(page_log), size, *TRAFFIC_DIMS).agg(
         F.count(F.lit(1)).alias("pv_ct"),
-        F.sum(F.when(F.col("last_page_id").isNull(), 1).otherwise(0)).alias("sv_ct"),
-        F.sum("during_time").alias("dur_sum"),
+        F.sum("sv_ct").alias("sv_ct"),
+        F.sum("dur_sum").alias("dur_sum"),
     )
     return _flat(out)
 
@@ -81,11 +99,6 @@ def uu_key(src: str, key: Column) -> Column:
     """Tag a unique-user key with its source table ("uv|<mid>",
     "cart|<user_id>"), so one first-seen chain serves every UU table."""
     return F.concat(F.lit(f"{src}|"), key)
-
-
-def is_uu_source(src: str) -> Column:
-    """The first-seen flag rows of one source (see ``uu_key``)."""
-    return F.col("key").startswith(f"{src}|")
 
 
 def unique_users(first_seen_flags: DataFrame, size: str = WINDOW) -> DataFrame:
@@ -110,6 +123,48 @@ def uu_rows(uu: DataFrame, src: str, count_col: str) -> DataFrame:
     """One source's rows of ``unique_users``, shaped as its serving
     table: (stt, edt, <count_col>)."""
     return uu.filter(F.col("src") == src).select("stt", "edt", F.col("uu_ct").alias(count_col))
+
+
+# ---- set-based twins: the warehouse's DWS steps -------------------------
+# Each takes one micro-batch of its DWD stream (epoch-millis ``ts``) and
+# returns the closed windows to upsert, shaped as the streaming function's
+# output.  The watermark rows are what reaches Spark's watermark node in
+# the streaming form: the search filter sits below it for A1 (Catalyst
+# pushes it through), the is_first filter for A3/A6.
+
+def _timed(batch: DataFrame) -> DataFrame:
+    return batch.withColumn("row_time", F.timestamp_millis("ts"))
+
+
+def keyword_windows(pages: DataFrame, batch_id: int, state: OpenWindows) -> DataFrame:
+    """A1 (``keyword_page_view``) as a set-based batch step."""
+    search = _search_pages(_timed(pages))
+    rows = _keywords(search).withColumn("keyword_count", F.lit(1))
+    return append_window_batch(pages.sparkSession, batch_id, state, rows, ["keyword"],
+                               ["keyword_count"], WINDOW, DELAY, events=search)
+
+
+def traffic_windows(pages: DataFrame, batch_id: int, state: OpenWindows) -> DataFrame:
+    """A2 (``traffic_vc_ch_ar_is_new``) as a set-based batch step."""
+    return append_window_batch(pages.sparkSession, batch_id, state,
+                               _traffic_rows(_timed(pages)), TRAFFIC_DIMS,
+                               ["pv_ct", "sv_ct", "dur_sum"], WINDOW, DELAY)
+
+
+def unique_user_windows(flags: DataFrame, batch_id: int, state: OpenWindows) -> DataFrame:
+    """A3 + A6 (``unique_users`` over one union input per source in
+    ``UU_SOURCES``, each with its own watermark) as a set-based batch
+    step over one read of the flags: the watermark is the min over the
+    sources, as Spark's ``min`` policy over the union."""
+    rows = (
+        _timed(flags.filter(F.col("is_first") == 1))
+        .select("row_time", F.substring_index("key", "|", 1).alias("src"),
+                F.lit(1).alias("uu_ct"))
+        .filter(F.col("src").isin(*UU_SOURCES))
+    )
+    return append_window_batch(flags.sparkSession, batch_id, state, rows, ["src"],
+                               ["uu_ct"], WINDOW, DELAY,
+                               sources={s: F.col("src") == s for s in UU_SOURCES})
 
 
 def user_login(log: DataFrame, size: str = WINDOW) -> DataFrame:

@@ -7,39 +7,46 @@ ODS (raw topic_db / topic_log streams)
 
 Layer boundaries match the reference: DWD materializes detail streams
 (parquet dirs standing in for Kafka topics), and DWS jobs *consume the DWD
-output as their own streams* — so windowed aggregations run as native
-Structured Streaming aggs with watermarks (cross-batch windows accumulate
-correctly; a foreachBatch-side agg would overwrite partial windows).
+output as their own streams*.  No query runs a state operator: the
+first-seen flags (``operators/state.first_seen_batch``) and the DWS
+windows (``operators/windows.append_window_batch``) are set operations
+inside ``foreachBatch`` against ``KeyedTable`` state under ``state/``, so
+the warehouse never loads a state store and runs no no-data batch.
+Cross-batch windows still accumulate: each batch adds its partials to
+the open-window table and upserts the windows the watermark closes.
 
-Replay: the keyed MERGE sinks (dim, order join, comment, visitor and
-first-seen state, serving tables) rewrite the same keys, and the flags
-query publishes one file per batch id, so a replayed batch of those
-converges to the same tables.  The DWD log routes and the cart_add
-stream are plain appends: a replayed ODS batch duplicates their rows.
+Replay: the keyed MERGE sinks (dim, order join, comment, visitor,
+first-seen and open-window state, serving tables) rewrite the same keys,
+and the cart_add route and the flags query publish one file per batch
+id, so a replayed batch of those converges to the same tables.  The DWD
+log routes are plain appends: a replayed ODS batch duplicates their rows.
 
-Watermark-advance delta vs Flink (documented semantic difference): Flink
-generates watermarks at the SOURCE, before any SQL filter, so every
-topic_db event advances every consumer's clock.  Spark computes the
-watermark at the EventTimeWatermark node — and Catalyst pushes
-deterministic route filters (`table='cart_info'` etc.) BELOW it, so a
-consumer's watermark advances only on events that survive its own filter.
-Consequence: a window over a quiet table flushes on that table's next
-event (or the query's no-data batch) rather than on unrelated topic
-traffic.  Results converge identically; only emission latency differs.
+Watermarks are the DWS twin's, computed as Spark's would be for the
+native window queries each twin replaces (``append_window_batch``): the
+max event time of the rows that reach the watermark node, minus 5 s,
+over all earlier batches.  Watermark-advance delta vs Flink (documented
+semantic difference): Flink generates watermarks at the SOURCE, before
+any SQL filter, so every topic_db event advances every consumer's clock.
+Spark computes the watermark at the EventTimeWatermark node — and
+Catalyst pushes deterministic filters (the keyword table's search
+filter, the unique-user table's ``is_first``) BELOW it, so a consumer's
+watermark advances only on events that survive its own filter; the
+twins keep that.  Consequence: a window over a quiet table flushes on
+that table's next event rather than on unrelated topic traffic.  Results
+converge identically; only emission latency differs.
 
-The unique-user window query (``dws_uu``) unions the per-source flag
-reads, each with its own watermark.  Spark's default ``min`` policy takes
-the slowest input's watermark, so a fast page stream never makes cart rows
-late — but a quiet input also holds every UU window open until it moves
-(an input that has no rows in a run holds the query's watermark where it
-stood).  That changes emission latency, not results.  The flags query
-upstream of it is stateless (``first_seen_batch`` against a state table)
-and has no watermark, so it drops no row as late; its state TTL follows
-the slowest source by the same ``min`` rule, so a lagging source keeps
-its first-seen entries however far ahead the other runs.  The window
-query still drops rows more than 5 s behind its slowest source — the
-reference's keyed first-visit step likewise never drops late events,
-its window does.
+The unique-user window query (``dws_uu``) reads the flags once and keeps
+one max event time per source tag (``uv``, ``cart``); its watermark is
+the min over them, Spark's ``min`` policy over one input per source, so
+a fast page stream never makes cart rows late — but a quiet source also
+holds every UU window open until it moves (a source with no rows yet
+holds the watermark where it stood).  That changes emission latency, not
+results.  The flags query upstream of it has no watermark, so it drops
+no row as late; its state TTL follows the slowest source by the same
+``min`` rule, so a lagging source keeps its first-seen entries however
+far ahead the other runs.  The window step still drops rows more than
+5 s behind its slowest source — the reference's keyed first-visit step
+likewise never drops late events, its window does.
 """
 
 from __future__ import annotations
@@ -55,6 +62,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 from .. import schemas
 from ..sinks.dim import DimWarehouse
 from ..sinks.serving import serving_foreach_batch
+from ..operators.windows import OpenWindows
 from ..sinks.upsert import KeyedTable
 from ..sources import kafka as ksrc
 from ..streaming import dws
@@ -81,21 +89,14 @@ CART_ADD_SCHEMA = (
 FLAGS_SCHEMA = "key string, dt string, ts long, is_first int"
 
 # checkpoint dirs that only older warehouse layouts write: one flags
-# query and one window query per unique-user table, and the state of the
-# stateful first-seen flags query; Warehouse refuses a root that holds them
+# query and one window query per unique-user table, and the state-store
+# state of the stateful first-seen flags and DWS window queries (a
+# stateless query resuming one would lose its open windows); Warehouse
+# refuses a root that holds them
 OLD_CHECKPOINTS = (
     "dwd_uv_flags", "dwd_cart_uu_flags", "dws_uv", "dws_cart_uu",
-    os.path.join("dwd_flags", "state"),
+    *(os.path.join(q, "state") for q in ("dwd_flags", "dws_kw", "dws_traffic", "dws_uu")),
 )
-
-
-def _watermarked(df: DataFrame) -> DataFrame:
-    """Attach ``row_time`` from epoch-millis ``ts`` and this stream's
-    own 5 s watermark.  Each input of a union gets its own, so Spark's
-    ``min`` policy holds the query at its slowest input."""
-    return df.withColumn("row_time", F.timestamp_millis("ts")).withWatermark(
-        "row_time", "5 seconds"
-    )
 
 
 def publish_batch(df: DataFrame, out_dir: str, batch_id: int) -> None:
@@ -178,10 +179,10 @@ class Warehouse:
                 )
                 self.comment_table.merge(self.spark, comment_info_transform(batch, dic))
 
-        def cart_append(batch: DataFrame) -> None:
-            cart = cart_add_transform(batch)
-            if cart.limit(1).count():
-                cart.write.mode("append").parquet(self.cart_add_dir)
+        def cart_append(batch: DataFrame, batch_id: int) -> None:
+            # one file per batch id, so a replay overwrites its own rows
+            # (an empty batch publishes an empty file)
+            publish_batch(cart_add_transform(batch), self.cart_add_dir, batch_id)
 
         def fn(batch: DataFrame, batch_id: int) -> None:
             # the three branches write disjoint tables, so their jobs
@@ -190,7 +191,7 @@ class Warehouse:
             try:
                 run_concurrently(batch.sparkSession, [
                     lambda: dim_then_comments(batch, batch_id),
-                    lambda: cart_append(batch),
+                    lambda: cart_append(batch, batch_id),
                     lambda: self.od_join.process_batch(batch, self.spark),
                 ])
             finally:
@@ -248,43 +249,44 @@ class Warehouse:
             w = w.trigger(availableNow=True)
         return [w.start()]
 
-    # ---- DWS: native streaming window aggs over the DWD streams ---------
+    # ---- DWS: set-based window steps over the DWD streams --------------
+    # Each query is stateless: its foreachBatch runs the table's
+    # append-window twin (streaming/dws.*_windows) against an OpenWindows
+    # state under state/<query name>, and upserts the closed windows into
+    # the serving tables.
     def dws_queries(self, available_now: bool = True):
         os.makedirs(self.paths.page_dir, exist_ok=True)
         os.makedirs(self.flags_dir, exist_ok=True)
-        page_stream = _watermarked(
-            self.spark.readStream.schema(PAGE_SCHEMA).parquet(self.paths.page_dir)
-        )
-
-        def flags(src: str) -> DataFrame:
-            # filtered before the watermark, so it advances on this
-            # source's rows only
-            return _watermarked(
-                self.spark.readStream.schema(FLAGS_SCHEMA)
-                .parquet(self.flags_dir)
-                .filter(dws.is_uu_source(src))
-            )
-
+        pages = self.spark.readStream.schema(PAGE_SCHEMA).parquet(self.paths.page_dir)
+        flags = self.spark.readStream.schema(FLAGS_SCHEMA).parquet(self.flags_dir)
         uu_routes = [
             (self.uv_serving, lambda b: dws.uu_rows(b, "uv", "uv_ct")),
             (self.cart_uu_serving, lambda b: dws.uu_rows(b, "cart", "cart_add_uu_ct")),
         ]
         specs = [
-            (dws.keyword_page_view(page_stream), [self.kw_serving], "dws_kw"),
-            (dws.traffic_vc_ch_ar_is_new(page_stream), [self.traffic_serving], "dws_traffic"),
-            (dws.unique_users(flags("uv").unionByName(flags("cart"))), uu_routes, "dws_uu"),
+            (pages, dws.keyword_windows, [self.kw_serving], "dws_kw"),
+            (pages, dws.traffic_windows, [self.traffic_serving], "dws_traffic"),
+            (flags, dws.unique_user_windows, uu_routes, "dws_uu"),
         ]
         handles = []
-        for agg, routes, name in specs:
+        for stream, windows, routes, name in specs:
             w = (
-                agg.writeStream.outputMode("append")
-                .foreachBatch(serving_foreach_batch(*routes))
+                stream.writeStream.foreachBatch(self._dws_foreach_batch(name, windows, routes))
                 .option("checkpointLocation", os.path.join(self.paths.ckpt, name))
             )
             if available_now:
                 w = w.trigger(availableNow=True)
             handles.append(w.start())
         return handles
+
+    def _dws_foreach_batch(self, name, windows, routes):
+        state = OpenWindows(os.path.join(self.paths.state, name))
+        serve = serving_foreach_batch(*routes)
+
+        def fn(batch: DataFrame, batch_id: int) -> None:
+            serve(windows(batch, batch_id, state), batch_id)
+
+        return fn
 
     # ---- wiring ----------------------------------------------------------
     def start(self, raw_db: DataFrame, raw_log: DataFrame, available_now: bool = True):

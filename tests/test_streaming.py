@@ -764,6 +764,7 @@ def test_prepare_merge_of_empty_first_batch_stages_a_version(spark, tmp_path):
 
 def test_full_warehouse_end_to_end(spark, tmp_path):
     from flink_realtime_dw4_0_spark import demo
+    from flink_realtime_dw4_0_spark.operators.windows import OpenWindows
     from flink_realtime_dw4_0_spark.sources.kafka import file_json_raw
     from flink_realtime_dw4_0_spark.streaming.warehouse import Warehouse, WarehousePaths
 
@@ -776,14 +777,20 @@ def test_full_warehouse_end_to_end(spark, tmp_path):
         schemas.TABLE_PROCESS_DIM,
     )
     wh = Warehouse(spark, WarehousePaths(str(tmp_path / "wh")), lambda s: config)
-    flags_handles = []
-    start_flags = wh.flags_queries
+    handles = []
 
-    def keep_flags_handles(**kw):
-        flags_handles.extend(start_flags(**kw))
-        return flags_handles
+    def keep_handles(phase):
+        started = getattr(wh, phase)
 
-    wh.flags_queries = keep_flags_handles
+        def fn(*a, **kw):
+            qs = started(*a, **kw)
+            handles.extend(qs)
+            return qs
+
+        setattr(wh, phase, fn)
+
+    for phase in ("start", "flags_queries", "dws_queries"):
+        keep_handles(phase)
     wh.run_available_now(file_json_raw(spark, str(src_db)), file_json_raw(spark, str(src_log)))
 
     # DIM
@@ -816,11 +823,23 @@ def test_full_warehouse_end_to_end(spark, tmp_path):
     assert set(os.listdir(wh.paths.ckpt)) == {
         "db", "log", "dwd_flags", "dws_kw", "dws_traffic", "dws_uu"}
     assert [d for d in os.listdir(wh.paths.dwd) if "flags" in d] == ["first_seen_flags"]
-    # the flags query is stateless: no state operator in any of its
-    # micro-batches (its first-seen state is a KeyedTable)
-    progress = [p for q in flags_handles for p in q.recentProgress]
-    assert progress and all(not p.stateOperators for p in progress)
+    # no query is stateful: none of the six reports a state operator in
+    # any micro-batch (first-seen and open-window state are KeyedTables),
+    # so each runs one micro-batch and no no-data batch
+    assert len(handles) == 6
+    progress = [p for q in handles for p in q.recentProgress]
+    assert len(progress) == 6 and all(not p.stateOperators for p in progress)
     assert wh.first_seen_state.read(spark).count() > 0
+    # the window state holds only windows a later row can still reach:
+    # none ends at or before the late watermark of the final batch (the
+    # golden window test shows the horizon moving over several batches)
+    for name in ("dws_kw", "dws_traffic", "dws_uu"):
+        windows = OpenWindows(os.path.join(wh.paths.state, name))
+        final = windows.entry()
+        assert final["next_watermark_ms"] > 0 and final["rows_dropped_late"] == 0
+        ends = [r[0] for r in windows.partials.read(spark)
+                .select(F.unix_millis("edt")).collect()]
+        assert ends and min(ends) > final["late_watermark_ms"]
 
 
 def test_warehouse_refuses_old_uu_checkpoints(spark, tmp_path):
@@ -853,9 +872,11 @@ def test_uu_windows_keep_per_source_watermarks(spark, tmp_path):
     the first user's entry stays live and the repeat is not counted; a
     horizon taken from the page stream would count the user twice.
 
-    Drain 2 also carries a page event: a resumed query counts an input
-    that has no rows in the run at the restored watermark, so without
-    page traffic the quiet page input would hold the window open (later
+    Drain 2 also carries a page event.  The native window query needed
+    it: a resumed query counts an input that has no rows in the run at
+    the restored watermark, so a quiet page input held the window open.
+    The set-based window step keeps each source's max event time in its
+    log across drains, so it would close the window without it (earlier
     emission, same result)."""
     from flink_realtime_dw4_0_spark import demo
     from flink_realtime_dw4_0_spark.sources.kafka import file_json_raw
@@ -5437,6 +5458,38 @@ def test_flags_batch_replay_publishes_one_file(spark, tmp_path):
     assert [tuple(r) for r in late.select("key", "is_first").collect()] == [("uv|m1", 1)]
 
 
+def test_cart_add_replay_publishes_one_file(spark, tmp_path):
+    """Re-running the warehouse's db body with one batch_id republishes
+    that batch's cart_add rows to the same single file, so a replayed
+    ODS batch does not duplicate cart increments; an empty batch
+    publishes an empty file."""
+    from flink_realtime_dw4_0_spark.streaming.warehouse import Warehouse, WarehousePaths
+
+    config = spark.createDataFrame([], schemas.TABLE_PROCESS_DIM)
+    wh = Warehouse(spark, WarehousePaths(str(tmp_path / "wh")), lambda s: config)
+    body = wh.db_foreach_batch()
+    carts = ksrc.topic_db(values_df(spark, [
+        mx("cart_info", "insert", {"id": "c1", "user_id": "u1", "sku_id": "s1",
+                                   "sku_num": "2", "cart_price": "1.0",
+                                   "sku_name": "w", "create_time": "t"}),
+        mx("cart_info", "update", {"id": "c1", "user_id": "u1", "sku_id": "s1",
+                                   "sku_num": "5"}, old={"sku_num": "2"}),
+    ]), watermark=None)
+
+    def snapshot():
+        rows = spark.read.parquet(wh.cart_add_dir).select("id", "sku_num").collect()
+        return sorted(os.listdir(wh.cart_add_dir)), sorted(tuple(r) for r in rows)
+
+    body(carts, 0)
+    once = snapshot()
+    body(carts, 0)
+    assert snapshot() == once == (["batch-000000000000.parquet"], [("c1", "2"), ("c1", "3")])
+    body(carts.limit(0), 1)
+    files, rows = snapshot()
+    assert files == ["batch-000000000000.parquet", "batch-000000000001.parquet"]
+    assert rows == once[1]
+
+
 def test_first_seen_batch_horizon_waits_for_a_late_source(spark, tmp_path):
     """A source whose first rows arrive behind the TTL horizon the other
     source set lowers it: its entries count from the next batch on, so a
@@ -5456,6 +5509,117 @@ def test_first_seen_batch_horizon_waits_for_a_late_source(spark, tmp_path):
     run(0, [("uv|m1", DAY1 + 48 * H)])
     assert run(1, [("cart|u1", DAY1 + H)]) == [("cart|u1", 1)]
     assert run(2, [("cart|u1", DAY1 + 2 * H)]) == [("cart|u1", 0)]
+
+
+def _flag_rows(spec):
+    """Flags rows (key, dt, ts, is_first) from (key, seconds past DAY1,
+    is_first) triples."""
+    return [(k, "2024-01-01", DAY1 + t * 1_000, f) for k, t, f in spec]
+
+
+# file 0 moves both sources; file 1 is a quiet file for cart and holds a
+# uv row for a window the watermark it runs under (25 s) would already
+# close — kept, since rows are late only against the previous batch's
+# watermark (0); file 2 holds a row that IS late then (window end 10 s
+# <= 25 s) and a non-first cart row far ahead, which must not move the
+# cart watermark (Catalyst pushes the is_first filter below it)
+_UU_FILES = [
+    [("uv|a", 1, 1), ("cart|x", 2, 1), ("uv|b", 30, 1), ("cart|y", 31, 1)],
+    [("uv|c", 2, 1), ("uv|d", 40, 1)],
+    [("uv|e", 3, 1), ("cart|z", 50, 1), ("uv|f", 60, 1), ("cart|x", 200, 0)],
+]
+
+
+def test_unique_user_windows_equal_streaming_window_query(spark, tmp_path):
+    """The set-based unique-user window step, driven batch by batch,
+    upserts exactly the windows the native append-mode query emits:
+    one watermarked input per source tag, unioned under Spark's min
+    policy, over the same three files."""
+    from flink_realtime_dw4_0_spark.operators.windows import OpenWindows
+    from flink_realtime_dw4_0_spark.streaming.warehouse import FLAGS_SCHEMA
+
+    _feed_files(tmp_path / "src", [
+        [json.dumps(dict(zip(["key", "dt", "ts", "is_first"], r))) for r in _flag_rows(f)]
+        for f in _UU_FILES
+    ])
+
+    def flags(src):
+        return (spark.readStream.schema(FLAGS_SCHEMA).option("maxFilesPerTrigger", 1)
+                .json(str(tmp_path / "src")).filter(F.col("key").startswith(f"{src}|"))
+                .withColumn("row_time", F.timestamp_millis("ts"))
+                .withWatermark("row_time", "5 seconds"))
+
+    q = (
+        dws.unique_users(flags("uv").unionByName(flags("cart")))
+        .writeStream.outputMode("append").format("memory").queryName("uu_golden")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination(120)
+    secs = F.expr("(unix_millis(stt) - %d) div 1000" % DAY1)
+    streamed = {(r[0], r[1]): r[2] for r in spark.sql("SELECT * FROM uu_golden")
+                .select(secs, "src", "uu_ct").collect()}
+    # Spark's batch 1 ran at watermark 25 s and dropped nothing
+    assert streamed[(0, "uv")] == 2
+    dropped = [op.numRowsDroppedByWatermark for p in q.recentProgress
+               for op in p.stateOperators]
+    assert sum(dropped) == 1
+
+    state = OpenWindows(str(tmp_path / "state"))
+    serving, emitted = {}, []
+    for bid, f in enumerate(_UU_FILES):
+        batch = spark.createDataFrame(_flag_rows(f), FLAGS_SCHEMA)
+        out = {(r[0], r[1]): r[2] for r in dws.unique_user_windows(batch, bid, state)
+               .select(secs, "src", "uu_ct").collect()}
+        serving.update(out)
+        emitted.append(out)
+    assert serving == streamed == {(0, "uv"): 2, (0, "cart"): 1,
+                                   (30, "uv"): 1, (30, "cart"): 1}
+    # batch 0 emits what a no-data batch at W_1 = 25 s would; batch 1
+    # adds uv|c to [0, 10) and upserts it again
+    assert emitted[0] == {(0, "uv"): 1, (0, "cart"): 1}
+    assert emitted[1] == {(0, "uv"): 2, (0, "cart"): 1}
+    log = [state.entry(b) for b in range(3)]
+    assert [e["next_watermark_ms"] - DAY1 for e in log] == [25_000, 26_000, 45_000]
+    assert [e["rows_dropped_late"] for e in log] == [0, 0, 1]
+    assert log[2]["max_event_ms_after"] == {"uv": DAY1 + 60_000, "cart": DAY1 + 50_000}
+    # the state holds only windows a later row can still reach: after
+    # batch 2 (late watermark W_1 = 25 s) the [0, 10) windows are gone
+    open_ends = {r[0] for r in state.partials.read(spark)
+                 .select(F.expr("(unix_millis(edt) - %d) div 1000" % DAY1)).collect()}
+    assert open_ends == {40, 50, 60, 70}
+
+
+def test_unique_user_windows_replay_is_pure(spark, tmp_path):
+    """Re-running a window batch with its batch id — its own partials
+    and log entry already written — upserts the same serving rows and
+    leaves the same state and log: the replay reads the log entry of the
+    batch before it, and its partials replace their earlier copies."""
+    from flink_realtime_dw4_0_spark.operators.windows import OpenWindows
+    from flink_realtime_dw4_0_spark.sinks.serving import serving_foreach_batch
+    from flink_realtime_dw4_0_spark.streaming.warehouse import FLAGS_SCHEMA
+
+    state = OpenWindows(str(tmp_path / "state"))
+    table = KeyedTable(str(tmp_path / "serving"), keys=["stt", "src"])
+    serve = serving_foreach_batch(table)
+
+    def run(bid):
+        batch = spark.createDataFrame(_flag_rows(_UU_FILES[bid]), FLAGS_SCHEMA)
+        serve(dws.unique_user_windows(batch, bid, state), bid)
+
+    def snapshot():
+        return (sorted(tuple(r) for r in table.read(spark).collect()),
+                sorted(tuple(r) for r in state.partials.read(spark).collect()),
+                state.entry(1))
+
+    run(0)
+    run(1)
+    once = snapshot()
+    run(1)
+    assert snapshot() == once
+    # uv|c is counted once, against the late watermark of batch 0 (0)
+    assert {(r[0].timestamp() * 1000 - DAY1, r[2], r[3]) for r in once[0]} == {
+        (0, "uv", 2), (0, "cart", 1)}
 
 
 def test_streaming_reservoir_equals_batch(spark, tmp_path):
@@ -5786,7 +5950,8 @@ def _drive_restart_foreach(spark, tmp_path, name, make_op, schema, batches,
 
 @pytest.mark.parametrize("op", ["cep_seq", "cep_pattern_loop",
                                 "rate_limit", "visitor_fix", "first_seen",
-                                "first_seen_batch", "topn", "neardup", "reservoir",
+                                "first_seen_batch", "append_window_batch", "topn",
+                                "neardup", "reservoir",
                                 "weighted_reservoir", "mr_measures",
                                 "followed_by_any", "combinations",
                                 "mr_nested"])
@@ -5891,6 +6056,32 @@ def test_checkpoint_restart_equals_uninterrupted(spark, tmp_path, op):
         assert restarted == uninterrupted
         flagged = {(k, t - base) for k, _dt, t, f in uninterrupted if f}
         assert flagged == {("k1", 0), ("k2", 1), ("k3", 3), ("k1", DAY)}
+        return
+
+    if op == "append_window_batch":
+        # the open-window partials and the watermark log cross the
+        # restart: after it, batch 2 still drops uv|e as late against
+        # the watermark batch 1 ran under, and closes [30, 40) at the
+        # max event times batches 0-2 built
+        from flink_realtime_dw4_0_spark.operators.windows import OpenWindows
+
+        batches = [[dict(zip(["key", "dt", "ts", "is_first"], r)) for r in _flag_rows(f)]
+                   for f in _UU_FILES]
+
+        def make_op(st):
+            state = OpenWindows(st)
+            return lambda batch, bid: dws.unique_user_windows(batch, bid, state)
+
+        restarted, uninterrupted = _drive_restart_foreach(
+            spark, tmp_path, "ckr_awb", make_op,
+            "key string, dt string, ts long, is_first int",
+            batches, split=2, out_cols=["stt", "src", "uu_ct"],
+        )
+        assert restarted == uninterrupted
+        # every emission is appended: [0, 10) uv first with a, then with c
+        assert {(r[0].timestamp() * 1000 - DAY1, r[1], r[2]) for r in uninterrupted} == {
+            (0, "uv", 1), (0, "uv", 2), (0, "cart", 1), (30_000, "uv", 1),
+            (30_000, "cart", 1)}
         return
 
     def ev(u, t_s, eid, et):
