@@ -1,4 +1,5 @@
-"""Projection / scalar expression operators (SURVEY §2.3 P1-P7).
+"""Projection / scalar expression operators (SURVEY §2.3 P3-P7; the P1
+map and P2 struct access are plain Column expressions where used).
 
 Everything here is a thin, named composition of built-in Column
 expressions — fully inside whole-stage codegen, no Python in the hot path.
@@ -8,21 +9,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def map_project(df: DataFrame, map_col: str, fields: dict[str, str], *extra: Column) -> DataFrame:
-    """P1 — extract logical columns from a MAP payload.
-
-    Parity: ``data['id'] AS id`` projections (DwdTradeCartAdd.java:63-77,
-    DwdTradeOrderDetail.java:127-191).  ``fields`` maps output name → map key.
-    """
-    cols = [F.col(map_col).getItem(k).alias(out) for out, k in fields.items()]
-    return df.select(*cols, *extra)
-
-
-def struct_field(col: str, field: str) -> Column:
-    """P2 — nested struct access, `info.dic_name` (DwdInteractionCommentInfo.java:73)."""
-    return F.col(f"{col}.{field}")
 
 
 def route_filter(df: DataFrame, **eq: str) -> DataFrame:

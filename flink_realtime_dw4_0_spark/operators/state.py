@@ -125,7 +125,8 @@ def visitor_fix(df: DataFrame) -> DataFrame:
     )
 
 
-_FIRST_SEEN_OUT = StructType(
+# the flags of first_seen and first_seen_batch
+FIRST_SEEN_OUT = StructType(
     [
         StructField("key", StringType()),
         StructField("dt", StringType()),
@@ -183,11 +184,6 @@ def _first_seen_fn(ttl_ms: int):
     return fn
 
 
-# Timer-free variant — safe to pass directly to applyInPandasWithState
-# with GroupStateTimeout.NoTimeout (setting a timer there throws).
-first_seen_fn = _first_seen_fn(0)
-
-
 def first_seen(
     df: DataFrame, delay: str = "24 hours",
     ttl_ms: int | None = FIRST_SEEN_TTL_MS,
@@ -234,7 +230,7 @@ def first_seen(
     with_dt = with_dt.withColumn("dt", F.date_format("row_time", "yyyy-MM-dd"))
     return with_dt.groupBy("key", "dt").applyInPandasWithState(
         _first_seen_fn(ttl),
-        outputStructType=_FIRST_SEEN_OUT,
+        outputStructType=FIRST_SEEN_OUT,
         stateStructType=_FIRST_SEEN_STATE,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout

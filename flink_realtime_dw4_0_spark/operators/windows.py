@@ -358,13 +358,15 @@ def append_window_batch(
     late, wm = prev["watermark_ms"], prev["next_watermark_ms"]
     before = {s: prev["max_event_ms_after"].get(s) for s in sources}
 
-    def end_ms(df: DataFrame) -> Column:
-        return F.unix_millis(F.window(df["row_time"], size).end)
-
+    # by name: a Dataset-bound row_time under F.window reads as an
+    # ambiguous self-join once the input's plan holds a join (as
+    # state.first_seen_batch's flags do)
+    w = F.window("row_time", size)
+    end_ms = F.unix_millis(w.end)
     stats = events.agg(
         *[F.max(F.when(p, F.unix_millis("row_time"))).alias(f"max{i}")
           for i, p in enumerate(sources.values())],
-        F.count_if(end_ms(events) <= late).alias("late"),
+        F.count_if(end_ms <= late).alias("late"),
     ).first()
     after = {
         s: max((v for v in (before[s], stats[f"max{i}"]) if v is not None), default=None)
@@ -377,9 +379,8 @@ def append_window_batch(
         "max_event_ms_after": after, "rows_dropped_late": stats["late"],
     })
 
-    w = F.window("row_time", size)
     partials = (
-        rows.filter(end_ms(rows) > late)
+        rows.filter(end_ms > late)
         .groupBy(w.start.alias("stt"), w.end.alias("edt"), *dims)
         .agg(*[F.sum(c).alias(c) for c in sums])
         .withColumn("batch", F.lit(batch_id).cast("long"))

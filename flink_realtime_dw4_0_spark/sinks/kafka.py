@@ -1,4 +1,4 @@
-"""Kafka sinks + multi-sink fan-out (SURVEY §2.2 K1/K2/K6).
+"""Kafka sinks (SURVEY §2.2 K1/K2).
 
 Delivery semantics (documented delta vs the reference, SURVEY §7.3):
 Flink's sink is transactional EXACTLY_ONCE (FlinkSinkUtil.java:20-31);
@@ -9,8 +9,6 @@ writes collapse in any keyed consumer/table.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -44,23 +42,3 @@ def kafka_append(
         .option("topic", topic)
         .option("checkpointLocation", checkpoint)
     )
-
-
-def fanout_foreach_batch(
-    routes: dict[str, Callable[[DataFrame], DataFrame]],
-    writers: dict[str, Callable[[DataFrame, int], None]],
-) -> Callable[[DataFrame, int], None]:
-    """K6 — one streaming query, N sinks (DwdBaseLog.java:69-73 writes 5
-    topics).  The micro-batch is persisted once, then each route's filter +
-    writer runs against the cached plan — Spark's idiom for side outputs
-    (SURVEY §2.7 F1)."""
-
-    def fn(batch: DataFrame, batch_id: int) -> None:
-        batch.persist()
-        try:
-            for name, route in routes.items():
-                writers[name](route(batch), batch_id)
-        finally:
-            batch.unpersist()
-
-    return fn

@@ -9,7 +9,9 @@ also run on bounded frames (tests / backfill) unchanged.
 The warehouse runs A1, A2 and A3/A6 through their ``*_windows`` twins
 instead: one ``foreachBatch`` step each over the DWD stream's batch,
 ``operators/windows.append_window_batch`` against an ``OpenWindows``
-state, emitting the same closed windows with no state store.
+state, emitting the same closed windows with no state store.  A3/A6's
+step takes the flags ``operators/state.first_seen_batch`` computes from
+the same batch, so the whole UU chain is one query.
 """
 
 from __future__ import annotations
@@ -154,8 +156,8 @@ def traffic_windows(pages: DataFrame, batch_id: int, state: OpenWindows) -> Data
 def unique_user_windows(flags: DataFrame, batch_id: int, state: OpenWindows) -> DataFrame:
     """A3 + A6 (``unique_users`` over one union input per source in
     ``UU_SOURCES``, each with its own watermark) as a set-based batch
-    step over one read of the flags: the watermark is the min over the
-    sources, as Spark's ``min`` policy over the union."""
+    step over one batch of source-tagged flags: the watermark is the
+    min over the sources, as Spark's ``min`` policy over the union."""
     rows = (
         _timed(flags.filter(F.col("is_first") == 1))
         .select("row_time", F.substring_index("key", "|", 1).alias("src"),

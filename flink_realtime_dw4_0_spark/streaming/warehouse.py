@@ -17,9 +17,9 @@ the open-window table and upserts the windows the watermark closes.
 
 Replay: the keyed MERGE sinks (dim, order join, comment, visitor,
 first-seen and open-window state, serving tables) rewrite the same keys,
-and the cart_add route and the flags query publish one file per batch
-id, so a replayed batch of those converges to the same tables.  The DWD
-log routes are plain appends: a replayed ODS batch duplicates their rows.
+and the cart_add route publishes one file per batch id, so a replayed
+batch of those converges to the same tables.  The DWD log routes are
+plain appends: a replayed ODS batch duplicates their rows.
 
 Watermarks are the DWS twin's, computed as Spark's would be for the
 native window queries each twin replaces (``append_window_batch``): the
@@ -35,18 +35,21 @@ twins keep that.  Consequence: a window over a quiet table flushes on
 that table's next event rather than on unrelated topic traffic.  Results
 converge identically; only emission latency differs.
 
-The unique-user window query (``dws_uu``) reads the flags once and keeps
+The unique-user query (``dws_uu``) reads the page route and cart_add as
+one source-tagged union and runs the whole A3/A6 chain in each batch —
+first-seen flags, windows, serving — as the reference's DWS UU apps keep
+their first-visit state inside the window job.  Its window step keeps
 one max event time per source tag (``uv``, ``cart``); its watermark is
 the min over them, Spark's ``min`` policy over one input per source, so
 a fast page stream never makes cart rows late — but a quiet source also
 holds every UU window open until it moves (a source with no rows yet
 holds the watermark where it stood).  That changes emission latency, not
-results.  The flags query upstream of it has no watermark, so it drops
-no row as late; its state TTL follows the slowest source by the same
-``min`` rule, so a lagging source keeps its first-seen entries however
-far ahead the other runs.  The window step still drops rows more than
-5 s behind its slowest source — the reference's keyed first-visit step
-likewise never drops late events, its window does.
+results.  The first-seen step has no watermark, so it drops no row as
+late; its state TTL follows the slowest source by the same ``min`` rule,
+so a lagging source keeps its first-seen entries however far ahead the
+other runs.  The window step still drops rows more than 5 s behind its
+slowest source — the reference's keyed first-visit step likewise never
+drops late events, its window does.
 """
 
 from __future__ import annotations
@@ -62,6 +65,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 from .. import schemas
 from ..sinks.dim import DimWarehouse
 from ..sinks.serving import serving_foreach_batch
+from ..operators.state import first_seen_batch
 from ..operators.windows import OpenWindows
 from ..sinks.upsert import KeyedTable
 from ..sources import kafka as ksrc
@@ -85,17 +89,15 @@ CART_ADD_SCHEMA = (
     "sku_num string, sku_name string, create_time string, ts long"
 )
 
-# first-seen flags DWD output (operators/state.first_seen_batch)
-FLAGS_SCHEMA = "key string, dt string, ts long, is_first int"
-
 # checkpoint dirs that only older warehouse layouts write: one flags
-# query and one window query per unique-user table, and the state-store
-# state of the stateful first-seen flags and DWS window queries (a
-# stateless query resuming one would lose its open windows); Warehouse
-# refuses a root that holds them
+# query and one window query per unique-user table, the flags query that
+# fed dws_uu through a DWD table (its dws_uu checkpoint reads that one
+# table, where dws_uu now reads two routes), and the state-store state
+# of the stateful DWS window queries (a stateless query resuming one
+# would lose its open windows); Warehouse refuses a root that holds them
 OLD_CHECKPOINTS = (
-    "dwd_uv_flags", "dwd_cart_uu_flags", "dws_uv", "dws_cart_uu",
-    *(os.path.join(q, "state") for q in ("dwd_flags", "dws_kw", "dws_traffic", "dws_uu")),
+    "dwd_uv_flags", "dwd_cart_uu_flags", "dwd_flags", "dws_uv", "dws_cart_uu",
+    *(os.path.join(q, "state") for q in ("dws_kw", "dws_traffic", "dws_uu")),
 )
 
 
@@ -152,7 +154,6 @@ class Warehouse:
         )
         self.uv_serving = KeyedTable(os.path.join(paths.dws, "home_detail_uv"), keys=["stt"])
         self.cart_uu_serving = KeyedTable(os.path.join(paths.dws, "cart_add_uu"), keys=["stt"])
-        self.flags_dir = os.path.join(paths.dwd, "first_seen_flags")
         self.first_seen_state = KeyedTable(os.path.join(paths.state, "first_seen"), keys=["key", "dt"])
         old = [d for d in OLD_CHECKPOINTS if os.path.isdir(os.path.join(paths.ckpt, d))]
         if old:
@@ -207,30 +208,37 @@ class Warehouse:
         )
         return dwd_log_foreach_batch(self.visitor_state, writers)
 
-    # ---- DWD flags: one first-seen chain for every unique-user table ----
-    # The UU tables (A3 home/detail UV, A6 cart-add UU) share one flags
-    # query over source-tagged keys ("uv|<mid>", "cart|<user_id>").  It is
-    # stateless: each micro-batch flags its rows with first_seen_batch
-    # against the first-seen state table and publishes them to a DWD
-    # table, which the DWS window query reads as its own stream — the
-    # reference's job-per-layer topology (flags job ≈ DwdBaseLog keyed
-    # state; window job ≈ the planned DWS app).
-    def flags_foreach_batch(self):
-        from ..operators.state import first_seen_batch
+    # ---- DWS: set-based window steps over the DWD streams --------------
+    # Each query is stateless: its foreachBatch runs the table's
+    # append-window twin (streaming/dws.*_windows) against an OpenWindows
+    # state under state/<query name>, and upserts the closed windows into
+    # the serving tables.  The unique-user tables (A3 home/detail UV, A6
+    # cart-add UU) share one query over source-tagged keys ("uv|<mid>",
+    # "cart|<user_id>"), whose batches are first flagged against the
+    # first-seen state.
+    def uu_foreach_batch(self):
+        windows = self._dws_foreach_batch("dws_uu", dws.unique_user_windows, [
+            (self.uv_serving, lambda b: dws.uu_rows(b, "uv", "uv_ct")),
+            (self.cart_uu_serving, lambda b: dws.uu_rows(b, "cart", "cart_add_uu_ct")),
+        ])
 
         def fn(batch: DataFrame, batch_id: int) -> None:
             flags = first_seen_batch(batch, self.first_seen_state, self.spark, batch_id)
             try:
-                publish_batch(flags, self.flags_dir, batch_id)
+                windows(flags, batch_id)
             finally:
+                # only after the serving merge: windows derived lazily
+                # from the flags would otherwise recompute them against
+                # the first-seen state first_seen_batch has rewritten
                 flags.unpersist()
 
         return fn
 
     def flags_queries(self, available_now: bool = True):
+        """Start the unique-user query ``dws_uu``, named after its first
+        step: the whole first-seen chain, flags through serving."""
         os.makedirs(self.paths.page_dir, exist_ok=True)
         os.makedirs(self.cart_add_dir, exist_ok=True)
-        os.makedirs(self.flags_dir, exist_ok=True)
         pages = self.spark.readStream.schema(PAGE_SCHEMA).parquet(self.paths.page_dir)
         home_detail = pages.filter(F.col("page.page_id").isin("home", "good_detail")).select(
             dws.uu_key("uv", F.col("common.mid")).alias("key"), "ts"
@@ -240,44 +248,21 @@ class Warehouse:
             dws.uu_key("cart", F.col("user_id")).alias("key"),
             (F.col("ts") * 1000).alias("ts"),  # maxwell envelope ts is seconds
         )
-        w = (
-            home_detail.unionByName(cart_users)
-            .writeStream.foreachBatch(self.flags_foreach_batch())
-            .option("checkpointLocation", os.path.join(self.paths.ckpt, "dwd_flags"))
-        )
-        if available_now:
-            w = w.trigger(availableNow=True)
-        return [w.start()]
+        union = home_detail.unionByName(cart_users)
+        return [self._start(union, self.uu_foreach_batch(), "dws_uu", available_now)]
 
-    # ---- DWS: set-based window steps over the DWD streams --------------
-    # Each query is stateless: its foreachBatch runs the table's
-    # append-window twin (streaming/dws.*_windows) against an OpenWindows
-    # state under state/<query name>, and upserts the closed windows into
-    # the serving tables.
     def dws_queries(self, available_now: bool = True):
+        """Start the page-route window queries ``dws_kw`` and ``dws_traffic``."""
         os.makedirs(self.paths.page_dir, exist_ok=True)
-        os.makedirs(self.flags_dir, exist_ok=True)
         pages = self.spark.readStream.schema(PAGE_SCHEMA).parquet(self.paths.page_dir)
-        flags = self.spark.readStream.schema(FLAGS_SCHEMA).parquet(self.flags_dir)
-        uu_routes = [
-            (self.uv_serving, lambda b: dws.uu_rows(b, "uv", "uv_ct")),
-            (self.cart_uu_serving, lambda b: dws.uu_rows(b, "cart", "cart_add_uu_ct")),
-        ]
-        specs = [
-            (pages, dws.keyword_windows, [self.kw_serving], "dws_kw"),
-            (pages, dws.traffic_windows, [self.traffic_serving], "dws_traffic"),
-            (flags, dws.unique_user_windows, uu_routes, "dws_uu"),
-        ]
-        handles = []
-        for stream, windows, routes, name in specs:
-            w = (
-                stream.writeStream.foreachBatch(self._dws_foreach_batch(name, windows, routes))
-                .option("checkpointLocation", os.path.join(self.paths.ckpt, name))
+        return [
+            self._start(pages, self._dws_foreach_batch(name, windows, [table]), name,
+                        available_now)
+            for windows, table, name in (
+                (dws.keyword_windows, self.kw_serving, "dws_kw"),
+                (dws.traffic_windows, self.traffic_serving, "dws_traffic"),
             )
-            if available_now:
-                w = w.trigger(availableNow=True)
-            handles.append(w.start())
-        return handles
+        ]
 
     def _dws_foreach_batch(self, name, windows, routes):
         state = OpenWindows(os.path.join(self.paths.state, name))
@@ -289,25 +274,24 @@ class Warehouse:
         return fn
 
     # ---- wiring ----------------------------------------------------------
+    def _start(self, stream: DataFrame, body, name: str, available_now: bool):
+        w = stream.writeStream.foreachBatch(body).option(
+            "checkpointLocation", os.path.join(self.paths.ckpt, name)
+        )
+        return (w.trigger(availableNow=True) if available_now else w).start()
+
     def start(self, raw_db: DataFrame, raw_log: DataFrame, available_now: bool = True):
-        db_q = (
-            ksrc.topic_db(raw_db, watermark=None)
-            .writeStream.foreachBatch(self.db_foreach_batch())
-            .option("checkpointLocation", os.path.join(self.paths.ckpt, "db"))
+        return (
+            self._start(ksrc.topic_db(raw_db, watermark=None), self.db_foreach_batch(), "db",
+                        available_now),
+            self._start(ksrc.topic_log(raw_log, watermark=None), self.log_foreach_batch(), "log",
+                        available_now),
         )
-        log_q = (
-            ksrc.topic_log(raw_log, watermark=None)
-            .writeStream.foreachBatch(self.log_foreach_batch())
-            .option("checkpointLocation", os.path.join(self.paths.ckpt, "log"))
-        )
-        if available_now:
-            db_q = db_q.trigger(availableNow=True)
-            log_q = log_q.trigger(availableNow=True)
-        return db_q.start(), log_q.start()
 
     def run_available_now(self, raw_db: DataFrame, raw_log: DataFrame, timeout: int = 300):
-        """Batch-drain the whole warehouse: ODS→DWD first, then DWS over
-        the freshly-written DWD stream (layered, like the reference's
+        """Batch-drain the whole warehouse: ODS→DWD first, then the
+        unique-user chain and the other DWS queries over the
+        freshly-written DWD streams (layered, like the reference's
         separate jobs)."""
         for q in self.start(raw_db, raw_log, available_now=True):
             q.awaitTermination(timeout)

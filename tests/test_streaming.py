@@ -809,7 +809,7 @@ def test_full_warehouse_end_to_end(spark, tmp_path):
     assert kw == {"fast": 2, "widget": 2}
     tr = {r.is_new: r.pv_ct for r in wh.traffic_serving.read(spark).collect()}
     assert tr == {"1": 3, "0": 1}
-    # DWS A3: first_seen flags layered through a DWD table into the window;
+    # DWS A3: first_seen flags and the window in one query;
     # mid1+mid3 hit home/good_detail pages in the first window
     uv = {(r.stt.isoformat(), r.uv_ct) for r in wh.uv_serving.read(spark).collect()}
     assert uv == {("2024-01-01T00:00:00", 2)}
@@ -818,17 +818,17 @@ def test_full_warehouse_end_to_end(spark, tmp_path):
     cu = {(r.stt.isoformat(), r.cart_add_uu_ct)
           for r in wh.cart_uu_serving.read(spark).collect()}
     assert cu == {("2024-01-01T00:00:00", 1)}
-    # layout: both UU tables share one flags query, one flags table and
-    # one window query
+    # layout: both UU tables share one query, flags through serving,
+    # with no flags table between its steps
     assert set(os.listdir(wh.paths.ckpt)) == {
-        "db", "log", "dwd_flags", "dws_kw", "dws_traffic", "dws_uu"}
-    assert [d for d in os.listdir(wh.paths.dwd) if "flags" in d] == ["first_seen_flags"]
-    # no query is stateful: none of the six reports a state operator in
+        "db", "log", "dws_kw", "dws_traffic", "dws_uu"}
+    assert [d for d in os.listdir(wh.paths.dwd) if "flags" in d] == []
+    # no query is stateful: none of the five reports a state operator in
     # any micro-batch (first-seen and open-window state are KeyedTables),
     # so each runs one micro-batch and no no-data batch
-    assert len(handles) == 6
+    assert len(handles) == 5
     progress = [p for q in handles for p in q.recentProgress]
-    assert len(progress) == 6 and all(not p.stateOperators for p in progress)
+    assert len(progress) == 5 and all(not p.stateOperators for p in progress)
     assert wh.first_seen_state.read(spark).count() > 0
     # the window state holds only windows a later row can still reach:
     # none ends at or before the late watermark of the final batch (the
@@ -844,9 +844,9 @@ def test_full_warehouse_end_to_end(spark, tmp_path):
 
 def test_warehouse_refuses_old_uu_checkpoints(spark, tmp_path):
     """A root written by an older layout (one flags query and one window
-    query per unique-user table, or the stateful first-seen flags query)
-    fails at construction, naming the old checkpoint and asking for a
-    fresh root."""
+    query per unique-user table, a flags query feeding dws_uu, or a
+    stateful window query) fails at construction, naming the old
+    checkpoint and asking for a fresh root."""
     from flink_realtime_dw4_0_spark.streaming.warehouse import (
         OLD_CHECKPOINTS, Warehouse, WarehousePaths,
     )
@@ -5419,43 +5419,52 @@ def test_first_seen_batch_equals_streaming_first_seen(spark, tmp_path):
                       ("k3", d1 + 4), ("k3", d2 + 2)]
 
 
-def test_flags_batch_replay_publishes_one_file(spark, tmp_path):
-    """Re-running the warehouse's flags body with one batch_id — the
-    state already holding that batch's own entries — republishes the
-    same rows to the same single file and leaves the state as it was.
-    Batch 1 raises the uv source's max first ts by 39 h: only because
-    the TTL horizon comes from the state BEFORE the batch does m1's day
-    entry stay live on the replay.  Batch 2 then finds it expired."""
-    from flink_realtime_dw4_0_spark.streaming.warehouse import (
-        FLAGS_SCHEMA, Warehouse, WarehousePaths,
-    )
+def test_uu_batch_replay_is_pure(spark, tmp_path):
+    """Re-running the warehouse's unique-user body with one batch_id —
+    the first-seen state, open windows and serving tables already
+    holding that batch's own writes — leaves all of them as they were.
+    Batch 1 raises both sources' max first ts by 39 h: only because the
+    TTL horizon comes from the state BEFORE the batch is m1 not flagged
+    again on the replay (its 2 h row would open a new uv window).
+    Batch 2 then finds m1's entry expired."""
+    from flink_realtime_dw4_0_spark.operators.windows import OpenWindows
+    from flink_realtime_dw4_0_spark.streaming.warehouse import Warehouse, WarehousePaths
 
     wh = Warehouse(spark, WarehousePaths(str(tmp_path / "wh")), lambda s: None)
-    body = wh.flags_foreach_batch()
+    body = wh.uu_foreach_batch()
+    windows = OpenWindows(os.path.join(wh.paths.state, "dws_uu"))
     H = 3_600_000
+    hours = F.expr("(unix_millis(stt) - %d) div %d" % (DAY1, H))
 
     def run(bid, rows):
         body(spark.createDataFrame(rows, "key string, ts long"), bid)
 
-    def snapshot():
-        flags = spark.read.schema(FLAGS_SCHEMA).parquet(wh.flags_dir).collect()
-        st = wh.first_seen_state.read(spark).collect()
-        return (sorted(os.listdir(wh.flags_dir)), sorted(tuple(r) for r in flags),
-                sorted(tuple(r) for r in st))
+    def rows(table, *cols):
+        return sorted(tuple(r) for r in table.read(spark).select(*cols).collect())
 
-    run(0, [("uv|m1", DAY1 + H)])
-    run(1, [("uv|m1", DAY1 + 2 * H), ("uv|m2", DAY1 + 40 * H)])
+    def snapshot():
+        return (rows(wh.first_seen_state, "*"),
+                rows(windows.partials, "batch", hours, "src", "uu_ct"), windows.entry(1),
+                rows(wh.uv_serving, hours, "uv_ct"),
+                rows(wh.cart_uu_serving, hours, "cart_add_uu_ct"))
+
+    run(0, [("uv|m1", DAY1 + H), ("cart|u1", DAY1 + H)])
+    batch1 = [("uv|m1", DAY1 + 2 * H), ("uv|m2", DAY1 + 40 * H), ("cart|u1", DAY1 + 40 * H)]
+    run(1, batch1)
     once = snapshot()
-    run(1, [("uv|m1", DAY1 + 2 * H), ("uv|m2", DAY1 + 40 * H)])
+    run(1, batch1)
     assert snapshot() == once
-    files, flags, _ = once
-    assert files == ["batch-000000000000.parquet", "batch-000000000001.parquet"]
-    assert {(k, t): f for k, _dt, t, f in flags} == {
-        ("uv|m1", DAY1 + H): 1, ("uv|m1", DAY1 + 2 * H): 0, ("uv|m2", DAY1 + 40 * H): 1}
+    first_seen, partials, _, uv, cart = once
+    assert {(k, t) for k, _dt, t, _b in first_seen} == {
+        ("uv|m1", DAY1 + H), ("cart|u1", DAY1 + H),
+        ("uv|m2", DAY1 + 40 * H), ("cart|u1", DAY1 + 40 * H)}
+    assert partials == [(0, 1, "cart", 1), (0, 1, "uv", 1),
+                        (1, 40, "cart", 1), (1, 40, "uv", 1)]
+    # batch 1's watermark (40 h - 5 s) closes the 1 h windows
+    assert uv == [(1, 1)] and cart == [(1, 1)]
     # horizon = DAY1 + 40 h - 36 h: m1's entry (first ts DAY1 + 1 h) expired
     run(2, [("uv|m1", DAY1 + 3 * H)])
-    late = spark.read.parquet(os.path.join(wh.flags_dir, "batch-000000000002.parquet"))
-    assert [tuple(r) for r in late.select("key", "is_first").collect()] == [("uv|m1", 1)]
+    assert rows(wh.uv_serving, hours, "uv_ct") == [(1, 1), (3, 1)]
 
 
 def test_cart_add_replay_publishes_one_file(spark, tmp_path):
@@ -5536,7 +5545,7 @@ def test_unique_user_windows_equal_streaming_window_query(spark, tmp_path):
     one watermarked input per source tag, unioned under Spark's min
     policy, over the same three files."""
     from flink_realtime_dw4_0_spark.operators.windows import OpenWindows
-    from flink_realtime_dw4_0_spark.streaming.warehouse import FLAGS_SCHEMA
+    from flink_realtime_dw4_0_spark.operators.state import FIRST_SEEN_OUT
 
     _feed_files(tmp_path / "src", [
         [json.dumps(dict(zip(["key", "dt", "ts", "is_first"], r))) for r in _flag_rows(f)]
@@ -5544,7 +5553,7 @@ def test_unique_user_windows_equal_streaming_window_query(spark, tmp_path):
     ])
 
     def flags(src):
-        return (spark.readStream.schema(FLAGS_SCHEMA).option("maxFilesPerTrigger", 1)
+        return (spark.readStream.schema(FIRST_SEEN_OUT).option("maxFilesPerTrigger", 1)
                 .json(str(tmp_path / "src")).filter(F.col("key").startswith(f"{src}|"))
                 .withColumn("row_time", F.timestamp_millis("ts"))
                 .withWatermark("row_time", "5 seconds"))
@@ -5568,7 +5577,7 @@ def test_unique_user_windows_equal_streaming_window_query(spark, tmp_path):
     state = OpenWindows(str(tmp_path / "state"))
     serving, emitted = {}, []
     for bid, f in enumerate(_UU_FILES):
-        batch = spark.createDataFrame(_flag_rows(f), FLAGS_SCHEMA)
+        batch = spark.createDataFrame(_flag_rows(f), FIRST_SEEN_OUT)
         out = {(r[0], r[1]): r[2] for r in dws.unique_user_windows(batch, bid, state)
                .select(secs, "src", "uu_ct").collect()}
         serving.update(out)
@@ -5597,14 +5606,14 @@ def test_unique_user_windows_replay_is_pure(spark, tmp_path):
     batch before it, and its partials replace their earlier copies."""
     from flink_realtime_dw4_0_spark.operators.windows import OpenWindows
     from flink_realtime_dw4_0_spark.sinks.serving import serving_foreach_batch
-    from flink_realtime_dw4_0_spark.streaming.warehouse import FLAGS_SCHEMA
+    from flink_realtime_dw4_0_spark.operators.state import FIRST_SEEN_OUT
 
     state = OpenWindows(str(tmp_path / "state"))
     table = KeyedTable(str(tmp_path / "serving"), keys=["stt", "src"])
     serve = serving_foreach_batch(table)
 
     def run(bid):
-        batch = spark.createDataFrame(_flag_rows(_UU_FILES[bid]), FLAGS_SCHEMA)
+        batch = spark.createDataFrame(_flag_rows(_UU_FILES[bid]), FIRST_SEEN_OUT)
         serve(dws.unique_user_windows(batch, bid, state), bid)
 
     def snapshot():
