@@ -327,14 +327,16 @@ def append_window_batch(
     (earlier emission here, same windows).  A row is dropped as late iff its window ends at or
     before W_(k-1), the previous batch's watermark (Spark filters late
     rows against it, and evicts against W_k).  Batch k emits every
-    window with W_(k-1) < end <= W_(k+1): what Spark's batch k emits
-    plus what its trailing no-data batch would, so after the last batch
-    of a drain the emitted windows equal Spark's; an earlier emission of
-    a window that a later batch adds rows to is re-emitted with them (a
-    serving upsert converges).  One difference remains: a row landing
-    in a window with W_k < end <= W_(k+1) in the NEXT drain is accepted
-    here and the window is emitted again, where Spark's no-data batch
-    at the end of the drain had closed it and would drop the row.
+    window with W_k < end <= W_(k+1), and those with W_(k-1) < end <= W_k
+    that its own partials touch: what Spark's batch k emits plus what its
+    trailing no-data batch would, so after the last batch of a drain the
+    emitted windows equal Spark's.  A window an earlier batch emitted is
+    re-emitted only by a batch that adds rows to it (a serving upsert
+    converges), so a quiet batch emits nothing.  One difference
+    remains: a row landing in a window with W_k < end <= W_(k+1) in the
+    NEXT drain is accepted here and the window is emitted again, where
+    Spark's no-data batch at the end of the drain had closed it and
+    would drop the row.
 
     State: this batch's partials are merged under (batch_id, slot), so a
     replay rewrites its own earlier rows; the TTL horizon drops windows
@@ -394,4 +396,12 @@ def append_window_batch(
     closed = (partials if stored is None else stored).filter(
         F.unix_millis("edt") <= nxt
     )
-    return closed.groupBy("stt", "edt", *dims).agg(*[F.sum(c).alias(c) for c in sums])
+    # a window batch k-1 emitted (end <= W_k) changed only if this batch
+    # added to it
+    return (
+        closed.groupBy("stt", "edt", *dims)
+        .agg(*[F.sum(c).alias(c) for c in sums],
+             F.bool_or(F.col("batch") == batch_id).alias("_touched"))
+        .filter((F.unix_millis("edt") > wm) | F.col("_touched"))
+        .drop("_touched")
+    )

@@ -5,10 +5,15 @@ Flink's sink is transactional EXACTLY_ONCE (FlinkSinkUtil.java:20-31);
 Spark's Kafka sink is at-least-once under checkpointing.  Effective
 exactly-once is restored downstream by keyed idempotence: every DWD
 record carries its primary key (upsert_kafka_records), so replayed
-writes collapse in any keyed consumer/table.
+writes collapse in any keyed consumer/table.  The file stand-in for an
+append topic (``publish_batch``, the warehouse's DWD streams) is
+exactly-once by construction: one file per batch id, replaced on replay.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -42,3 +47,16 @@ def kafka_append(
         .option("topic", topic)
         .option("checkpointLocation", checkpoint)
     )
+
+
+def publish_batch(df: DataFrame, out_dir: str, batch_id: int) -> None:
+    """Write ``df`` into ``out_dir`` as exactly one parquet file named
+    after ``batch_id``, so a replayed batch overwrites its own file
+    instead of appending a duplicate.  The file is built under an
+    ``_``-prefixed dir, which file-stream readers skip, and moved in with
+    ``os.replace``, so a reader never lists a partial file."""
+    tmp = os.path.join(out_dir, f"_tmp_{batch_id}")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    (part,) = [f for f in os.listdir(tmp) if f.startswith("part-")]
+    os.replace(os.path.join(tmp, part), os.path.join(out_dir, f"batch-{batch_id:012d}.parquet"))
+    shutil.rmtree(tmp)

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators import etl, split, state as state_ops
+from ..sinks.kafka import publish_batch
 from ..sinks.upsert import KeyedTable
 
 
@@ -57,12 +58,14 @@ def dwd_log_foreach_batch(
 
 
 def parquet_route_writers(out_root: str, routes: list[str]) -> dict[str, Callable]:
-    """Test/file sinks: one parquet dir per route (production swaps in
-    kafka_append per topic, Constant.java:58-63)."""
+    """File sinks: one parquet dir per route (production swaps in
+    kafka_append per topic, Constant.java:58-63), each batch published as
+    one file per batch id, so a replayed ODS batch rewrites its own rows
+    instead of duplicating them."""
 
     def writer_for(name: str) -> Callable[[DataFrame, int], None]:
         def w(df: DataFrame, batch_id: int) -> None:
-            df.write.mode("append").parquet(os.path.join(out_root, name))
+            publish_batch(df, os.path.join(out_root, name), batch_id)
 
         return w
 

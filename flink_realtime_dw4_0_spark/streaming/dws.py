@@ -11,7 +11,9 @@ instead: one ``foreachBatch`` step each over the DWD stream's batch,
 ``operators/windows.append_window_batch`` against an ``OpenWindows``
 state, emitting the same closed windows with no state store.  A3/A6's
 step takes the flags ``operators/state.first_seen_batch`` computes from
-the same batch, so the whole UU chain is one query.
+the same batch, so the whole UU chain is one query; A1's and A2's steps
+run side by side on one page batch, in one query, each with its own
+state and watermark.
 """
 
 from __future__ import annotations

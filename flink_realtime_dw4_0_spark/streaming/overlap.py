@@ -8,7 +8,9 @@ batch body hands them to ``run_concurrently`` and the scheduler
 interleaves their jobs.
 
 Callers keep write order per table: two thunks must never write the same
-table (group same-table steps into one thunk).
+table (group same-table steps into one thunk).  ``concurrent_foreach_batch``
+is the whole body shape: persist the batch once, run its steps through
+``run_concurrently``, release it.
 """
 
 from __future__ import annotations
@@ -17,7 +19,7 @@ from collections.abc import Callable, Sequence
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def run_concurrently(spark: SparkSession, thunks: Sequence[Callable[[], None]]) -> None:
@@ -43,3 +45,22 @@ def run_concurrently(spark: SparkSession, thunks: Sequence[Callable[[], None]]) 
         futures = [pool.submit(t) for t in targets]
     for f in futures:
         f.result()
+
+
+def concurrent_foreach_batch(
+    *steps: Callable[[DataFrame, int], None],
+) -> Callable[[DataFrame, int], None]:
+    """foreachBatch body: persist the batch, so every step reads it from
+    one scan, and run the ``steps`` (each ``step(batch, batch_id)``) on
+    it through ``run_concurrently``.  Steps must write disjoint tables;
+    every step ends before the batch is released."""
+
+    def fn(batch: DataFrame, batch_id: int) -> None:
+        batch.persist()
+        try:
+            run_concurrently(batch.sparkSession,
+                             [lambda s=s: s(batch, batch_id) for s in steps])
+        finally:
+            batch.unpersist()
+
+    return fn

@@ -17,9 +17,8 @@ the open-window table and upserts the windows the watermark closes.
 
 Replay: the keyed MERGE sinks (dim, order join, comment, visitor,
 first-seen and open-window state, serving tables) rewrite the same keys,
-and the cart_add route publishes one file per batch id, so a replayed
-batch of those converges to the same tables.  The DWD log routes are
-plain appends: a replayed ODS batch duplicates their rows.
+and the DWD streams (cart_add, the five log routes) publish one file per
+batch id, so a replayed batch converges to the same tables.
 
 Watermarks are the DWS twin's, computed as Spark's would be for the
 native window queries each twin replaces (``append_window_batch``): the
@@ -33,7 +32,10 @@ filter, the unique-user table's ``is_first``) BELOW it, so a consumer's
 watermark advances only on events that survive its own filter; the
 twins keep that.  Consequence: a window over a quiet table flushes on
 that table's next event rather than on unrelated topic traffic.  Results
-converge identically; only emission latency differs.
+converge identically; only emission latency differs.  Each step keeps
+its watermark in its own ``state/<step>/log``, so the keyword and
+traffic steps share one query (``dws_pages``) and one page scan per
+batch without sharing a watermark.
 
 The unique-user query (``dws_uu``) reads the page route and cart_add as
 one source-tagged union and runs the whole A3/A6 chain in each batch —
@@ -55,7 +57,6 @@ drops late events, its window does.
 from __future__ import annotations
 
 import os
-import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -64,6 +65,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from .. import schemas
 from ..sinks.dim import DimWarehouse
+from ..sinks.kafka import publish_batch
 from ..sinks.serving import serving_foreach_batch
 from ..operators.state import first_seen_batch
 from ..operators.windows import OpenWindows
@@ -73,7 +75,7 @@ from ..streaming import dws
 from ..streaming.dim import dim_foreach_batch
 from ..streaming.dwd_log import dwd_log_foreach_batch, parquet_route_writers
 from ..streaming.dwd_trade import OrderDetailJoin, cart_add_transform, comment_info_transform
-from ..streaming.overlap import run_concurrently
+from ..streaming.overlap import concurrent_foreach_batch
 
 PAGE_SCHEMA = StructType(
     [
@@ -92,26 +94,15 @@ CART_ADD_SCHEMA = (
 # checkpoint dirs that only older warehouse layouts write: one flags
 # query and one window query per unique-user table, the flags query that
 # fed dws_uu through a DWD table (its dws_uu checkpoint reads that one
-# table, where dws_uu now reads two routes), and the state-store state
-# of the stateful DWS window queries (a stateless query resuming one
-# would lose its open windows); Warehouse refuses a root that holds them
+# table, where dws_uu now reads two routes), one window query per page
+# table (their batch ids restart at 0 under dws_pages, whose batches
+# would overwrite their partials slots), and the state-store state of
+# the stateful UU window query (a stateless query resuming it would lose
+# its open windows); Warehouse refuses a root that holds them
 OLD_CHECKPOINTS = (
     "dwd_uv_flags", "dwd_cart_uu_flags", "dwd_flags", "dws_uv", "dws_cart_uu",
-    *(os.path.join(q, "state") for q in ("dws_kw", "dws_traffic", "dws_uu")),
+    "dws_kw", "dws_traffic", os.path.join("dws_uu", "state"),
 )
-
-
-def publish_batch(df: DataFrame, out_dir: str, batch_id: int) -> None:
-    """Write ``df`` into ``out_dir`` as exactly one parquet file named
-    after ``batch_id``, so a replayed batch overwrites its own file
-    instead of appending a duplicate.  The file is built under an
-    ``_``-prefixed dir, which file-stream readers skip, and moved in with
-    ``os.replace``, so a reader never lists a partial file."""
-    tmp = os.path.join(out_dir, f"_tmp_{batch_id}")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    (part,) = [f for f in os.listdir(tmp) if f.startswith("part-")]
-    os.replace(os.path.join(tmp, part), os.path.join(out_dir, f"batch-{batch_id:012d}.parquet"))
-    shutil.rmtree(tmp)
 
 
 @dataclass
@@ -185,20 +176,11 @@ class Warehouse:
             # (an empty batch publishes an empty file)
             publish_batch(cart_add_transform(batch), self.cart_add_dir, batch_id)
 
-        def fn(batch: DataFrame, batch_id: int) -> None:
-            # the three branches write disjoint tables, so their jobs
-            # overlap; every branch ends before the batch is released
-            batch.persist()
-            try:
-                run_concurrently(batch.sparkSession, [
-                    lambda: dim_then_comments(batch, batch_id),
-                    lambda: cart_append(batch, batch_id),
-                    lambda: self.od_join.process_batch(batch, self.spark),
-                ])
-            finally:
-                batch.unpersist()
-
-        return fn
+        # the three steps write disjoint tables, so their jobs overlap
+        return concurrent_foreach_batch(
+            dim_then_comments, cart_append,
+            lambda batch, _batch_id: self.od_join.process_batch(batch, self.spark),
+        )
 
     # ---- DWD (log side): split + visitor fix → route dirs ---------------
     def log_foreach_batch(self):
@@ -209,13 +191,14 @@ class Warehouse:
         return dwd_log_foreach_batch(self.visitor_state, writers)
 
     # ---- DWS: set-based window steps over the DWD streams --------------
-    # Each query is stateless: its foreachBatch runs the table's
+    # Both queries are stateless: each window step runs its table's
     # append-window twin (streaming/dws.*_windows) against an OpenWindows
-    # state under state/<query name>, and upserts the closed windows into
-    # the serving tables.  The unique-user tables (A3 home/detail UV, A6
-    # cart-add UU) share one query over source-tagged keys ("uv|<mid>",
-    # "cart|<user_id>"), whose batches are first flagged against the
-    # first-seen state.
+    # state under state/<step name>, and upserts the closed windows into
+    # the serving tables.  dws_uu serves the unique-user tables (A3
+    # home/detail UV, A6 cart-add UU) from source-tagged keys ("uv|<mid>",
+    # "cart|<user_id>") first flagged against the first-seen state;
+    # dws_pages runs the keyword (A1) and traffic (A2) steps side by side
+    # over one persisted page batch.
     def uu_foreach_batch(self):
         windows = self._dws_foreach_batch("dws_uu", dws.unique_user_windows, [
             (self.uv_serving, lambda b: dws.uu_rows(b, "uv", "uv_ct")),
@@ -251,18 +234,17 @@ class Warehouse:
         union = home_detail.unionByName(cart_users)
         return [self._start(union, self.uu_foreach_batch(), "dws_uu", available_now)]
 
+    def pages_foreach_batch(self):
+        return concurrent_foreach_batch(
+            self._dws_foreach_batch("dws_kw", dws.keyword_windows, [self.kw_serving]),
+            self._dws_foreach_batch("dws_traffic", dws.traffic_windows, [self.traffic_serving]),
+        )
+
     def dws_queries(self, available_now: bool = True):
-        """Start the page-route window queries ``dws_kw`` and ``dws_traffic``."""
+        """Start the page-window query ``dws_pages``."""
         os.makedirs(self.paths.page_dir, exist_ok=True)
         pages = self.spark.readStream.schema(PAGE_SCHEMA).parquet(self.paths.page_dir)
-        return [
-            self._start(pages, self._dws_foreach_batch(name, windows, [table]), name,
-                        available_now)
-            for windows, table, name in (
-                (dws.keyword_windows, self.kw_serving, "dws_kw"),
-                (dws.traffic_windows, self.traffic_serving, "dws_traffic"),
-            )
-        ]
+        return [self._start(pages, self.pages_foreach_batch(), "dws_pages", available_now)]
 
     def _dws_foreach_batch(self, name, windows, routes):
         state = OpenWindows(os.path.join(self.paths.state, name))
@@ -275,7 +257,7 @@ class Warehouse:
 
     # ---- wiring ----------------------------------------------------------
     def _start(self, stream: DataFrame, body, name: str, available_now: bool):
-        w = stream.writeStream.foreachBatch(body).option(
+        w = stream.writeStream.queryName(name).foreachBatch(body).option(
             "checkpointLocation", os.path.join(self.paths.ckpt, name)
         )
         return (w.trigger(availableNow=True) if available_now else w).start()
@@ -290,7 +272,7 @@ class Warehouse:
 
     def run_available_now(self, raw_db: DataFrame, raw_log: DataFrame, timeout: int = 300):
         """Batch-drain the whole warehouse: ODS→DWD first, then the
-        unique-user chain and the other DWS queries over the
+        unique-user chain, then the page windows, over the
         freshly-written DWD streams (layered, like the reference's
         separate jobs)."""
         for q in self.start(raw_db, raw_log, available_now=True):

@@ -819,16 +819,19 @@ def test_full_warehouse_end_to_end(spark, tmp_path):
           for r in wh.cart_uu_serving.read(spark).collect()}
     assert cu == {("2024-01-01T00:00:00", 1)}
     # layout: both UU tables share one query, flags through serving,
-    # with no flags table between its steps
-    assert set(os.listdir(wh.paths.ckpt)) == {
-        "db", "log", "dws_kw", "dws_traffic", "dws_uu"}
+    # with no flags table between its steps; the keyword and traffic
+    # windows share the other DWS query over the page route
+    queries = {"db", "log", "dws_uu", "dws_pages"}
+    assert set(os.listdir(wh.paths.ckpt)) == queries
     assert [d for d in os.listdir(wh.paths.dwd) if "flags" in d] == []
-    # no query is stateful: none of the five reports a state operator in
+    # no query is stateful: none of the four reports a state operator in
     # any micro-batch (first-seen and open-window state are KeyedTables),
-    # so each runs one micro-batch and no no-data batch
-    assert len(handles) == 5
+    # so each runs one micro-batch and no no-data batch; each is named
+    # after its checkpoint
+    assert len(handles) == 4
     progress = [p for q in handles for p in q.recentProgress]
-    assert len(progress) == 5 and all(not p.stateOperators for p in progress)
+    assert len(progress) == 4 and all(not p.stateOperators for p in progress)
+    assert {p.name for p in progress} == queries
     assert wh.first_seen_state.read(spark).count() > 0
     # the window state holds only windows a later row can still reach:
     # none ends at or before the late watermark of the final batch (the
@@ -5467,6 +5470,91 @@ def test_uu_batch_replay_is_pure(spark, tmp_path):
     assert rows(wh.uv_serving, hours, "uv_ct") == [(1, 1), (3, 1)]
 
 
+def test_page_windows_batch_replay_is_pure(spark, tmp_path):
+    """Re-running the warehouse's page-window body (``dws_pages``) with
+    one batch_id leaves both serving tables, both partials tables and
+    both log entries as they were.  The two steps share the batch but
+    not a watermark: the keyword step's moves only on searches, so
+    batch 1 closes [0, 10) for traffic at 25 s and for keywords at 15 s
+    (the 20 s search), and [20, 30) stays open for both."""
+    from flink_realtime_dw4_0_spark.operators.windows import OpenWindows
+    from flink_realtime_dw4_0_spark.streaming.warehouse import (
+        PAGE_SCHEMA, Warehouse, WarehousePaths,
+    )
+
+    wh = Warehouse(spark, WarehousePaths(str(tmp_path / "wh")), lambda s: None)
+    body = wh.pages_foreach_batch()
+    kw, traffic = (OpenWindows(os.path.join(wh.paths.state, n))
+                   for n in ("dws_kw", "dws_traffic"))
+    secs = F.expr("(unix_millis(stt) - %d) div 1000" % DAY1)
+
+    def page(s, item=None):
+        common = {"mid": "m1", "is_new": "1", "vc": "v1", "ch": "c1", "ar": "a1"}
+        pg = ({"page_id": "good_list", "last_page_id": "search", "item": item,
+               "during_time": 1} if item else {"page_id": "home", "during_time": 1})
+        return {"common": common, "page": pg, "ts": DAY1 + s * 1000}
+
+    def run(bid, pages):
+        body(spark.createDataFrame(pages, PAGE_SCHEMA), bid)
+
+    def rows(table, *cols):
+        return sorted(tuple(r) for r in table.read(spark).select(*cols).collect())
+
+    def snapshot():
+        return (rows(wh.kw_serving, secs, "keyword", "keyword_count"),
+                rows(wh.traffic_serving, secs, "pv_ct", "sv_ct", "dur_sum"),
+                rows(kw.partials, "batch", secs, "keyword", "keyword_count"),
+                rows(traffic.partials, "batch", secs, "pv_ct"),
+                kw.entry(1), traffic.entry(1))
+
+    run(0, [page(1, "fast widget"), page(2)])
+    batch1 = [page(3, "fast"), page(20, "slow"), page(30)]
+    run(1, batch1)
+    once = snapshot()
+    run(1, batch1)
+    assert snapshot() == once
+    kw_rows, traffic_rows, kw_partials, traffic_partials, kw_log, traffic_log = once
+    assert kw_rows == [(0, "fast", 2), (0, "widget", 1)]
+    assert traffic_rows == [(0, 3, 1, 3)]
+    assert kw_partials == [(0, 0, "fast", 1), (0, 0, "widget", 1),
+                           (1, 0, "fast", 1), (1, 20, "slow", 1)]
+    assert traffic_partials == [(0, 0, 2), (1, 0, 1), (1, 20, 1), (1, 30, 1)]
+    assert kw_log["next_watermark_ms"] - DAY1 == 15_000
+    assert traffic_log["next_watermark_ms"] - DAY1 == 25_000
+
+
+def test_log_route_replay_keeps_rows(spark, tmp_path):
+    """Re-running the warehouse's log body with one batch_id republishes
+    every route's rows for that batch instead of appending them again:
+    each route holds the same row multiset after the replay."""
+    from flink_realtime_dw4_0_spark.streaming.warehouse import Warehouse, WarehousePaths
+
+    wh = Warehouse(spark, WarehousePaths(str(tmp_path / "wh")), lambda s: None)
+    body = wh.log_foreach_batch()
+    page = {"page_id": "home", "during_time": 1000}
+    batch = ksrc.topic_log(values_df(spark, [
+        log_line("m1", "1", DAY1 + 1000, page=page,
+                 displays=[{"item": "i1", "item_type": "sku", "pos_id": "p1"}],
+                 actions=[{"action_id": "fav", "item": "i1", "ts": DAY1 + 1500}]),
+        log_line("m2", "0", DAY1 + 3000, page=page),
+        log_line("m3", "1", DAY1 + 4000, start={"entry": "icon", "loading_time": 200}),
+        log_line("m4", "1", DAY1 + 5000, page=page, err={"error_code": "42", "msg": "x"}),
+    ]), watermark=None)
+    routes = ["err", "start", "display", "action", "page"]
+
+    def snapshot():
+        root = os.path.join(wh.paths.dwd, "log")
+        return {r: sorted(map(str, spark.read.parquet(os.path.join(root, r)).collect()))
+                for r in routes}
+
+    body(batch, 0)
+    once = snapshot()
+    body(batch, 0)
+    assert snapshot() == once
+    assert {r: len(v) for r, v in once.items()} == {
+        "err": 1, "start": 1, "display": 1, "action": 1, "page": 3}
+
+
 def test_cart_add_replay_publishes_one_file(spark, tmp_path):
     """Re-running the warehouse's db body with one batch_id republishes
     that batch's cart_add rows to the same single file, so a replayed
@@ -5585,9 +5673,10 @@ def test_unique_user_windows_equal_streaming_window_query(spark, tmp_path):
     assert serving == streamed == {(0, "uv"): 2, (0, "cart"): 1,
                                    (30, "uv"): 1, (30, "cart"): 1}
     # batch 0 emits what a no-data batch at W_1 = 25 s would; batch 1
-    # adds uv|c to [0, 10) and upserts it again
+    # adds uv|c to [0, 10) and upserts it again, but not the cart window
+    # it left untouched
     assert emitted[0] == {(0, "uv"): 1, (0, "cart"): 1}
-    assert emitted[1] == {(0, "uv"): 2, (0, "cart"): 1}
+    assert emitted[1] == {(0, "uv"): 2}
     log = [state.entry(b) for b in range(3)]
     assert [e["next_watermark_ms"] - DAY1 for e in log] == [25_000, 26_000, 45_000]
     assert [e["rows_dropped_late"] for e in log] == [0, 0, 1]
