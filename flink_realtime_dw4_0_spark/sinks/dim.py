@@ -101,7 +101,10 @@ class DimWarehouse:
         try:
             upserts = latest.filter(F.col("type") != "delete")
             deletes = latest.filter(F.col("type") == "delete")
-            table.merge(spark, upserts, deletes=deletes if deletes.limit(1).count() else None)
+            # merge() owns emptiness: an empty `deletes` adds no bucket
+            # to its touched-bucket probe, and an empty batch commits
+            # nothing
+            table.merge(spark, upserts, deletes=deletes)
         finally:
             latest.unpersist()
 

@@ -27,7 +27,8 @@ def serving_foreach_batch(
     ``(table, rows)`` pair, whose ``rows(batch)`` picks and shapes that
     table's share — so one window query can feed several serving tables.
 
-    The batch is persisted so its stateful window plan runs once: on an
+    The batch is persisted so the window step's plan that computed it
+    (a read of the open-window partials) runs once: on an
     existing table merge() reads it twice (touched-bucket probe, then the
     write; a first merge reads it once, in the write), and an empty batch
     commits nothing, so no probe of its own is needed."""

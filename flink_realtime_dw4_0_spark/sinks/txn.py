@@ -48,19 +48,16 @@ def _flip(table_path: str, version: str) -> None:
     # snapshot version it was computed against — if CURRENT moved since
     # (e.g. a normal commit interleaved between staging and the intent
     # journal), flipping would drop the interleaved writer's buckets.
-    man_p = KeyedTable.manifest_path_of(table_path, version)
-    if os.path.exists(man_p):
-        with open(man_p) as fh:
-            man = json.load(fh)
-        if "base" in man:
-            cur = KeyedTable.current_pointer_of(table_path)
-            if cur != man["base"]:
-                raise CommitConflictError(
-                    f"table {table_path}: staged version {version!r} was "
-                    f"computed against snapshot {man['base']!r} but CURRENT "
-                    f"is now {cur!r} — the publish lost the race; restage "
-                    "against the new snapshot"
-                )
+    with open(KeyedTable.manifest_path_of(table_path, version)) as fh:
+        base = json.load(fh)["base"]
+    cur = KeyedTable.current_pointer_of(table_path)
+    if cur != base:
+        raise CommitConflictError(
+            f"table {table_path}: staged version {version!r} was "
+            f"computed against snapshot {base!r} but CURRENT "
+            f"is now {cur!r} — the publish lost the race; restage "
+            "against the new snapshot"
+        )
     cur = os.path.join(table_path, "CURRENT")
     tmp = f"{cur}.tmp_txn_{version}"
     with open(tmp, "w") as fh:
@@ -219,12 +216,10 @@ class TableTxn:
         # age out via their _STAGED sentinels) instead of journaling a
         # flip that would drop the winner's buckets.
         for table, e in zip(updates, prepared):
-            man = table._load_manifest(e["version"])
-            if man is not None and "base" in man and (
-                table._current_version() != man["base"]
-            ):
+            base = table._load_manifest(e["version"])["base"]
+            if table._current_version() != base:
                 raise CommitConflictError(
-                    f"table {table.path}: snapshot {man['base']!r} was "
+                    f"table {table.path}: snapshot {base!r} was "
                     "superseded while the publish was staging — re-read "
                     "and retry the whole publish"
                 )

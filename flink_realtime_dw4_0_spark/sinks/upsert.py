@@ -55,6 +55,11 @@ class KeyedTable:
     delete(keys)   — tombstone application (type='delete' rows, K4)
     """
 
+    # bloom sidecar geometry (see read_eq); each sidecar records its own
+    # bits and k, so a probe reads sidecars of any geometry
+    BLOOM_BITS = 65536
+    BLOOM_K = 4
+
     def __init__(
         self,
         path: str,
@@ -64,23 +69,17 @@ class KeyedTable:
         n_buckets: int = 16,
         ttl_col: str = "ts",
         bloom_cols: list[str] | None = None,
-        bloom_bits: int = 65536,
-        bloom_k: int = 4,
     ):
         self.path = path
         self.keys = keys
         self.version_col = version_col
         # pruning observability of the latest read_eq/read_in (None until
-        # a bloom-pruned read runs; stays None on the legacy flat layout)
+        # a bloom-pruned read runs)
         self.last_eq_scan: dict | None = None
         # per-bucket bloom sidecars for equality skipping on NON-key
         # columns (see read_eq): built at commit for written buckets;
         # inherited buckets keep the sidecar next to their data files
         self.bloom_cols = list(bloom_cols or [])
-        if bloom_bits % 8 or bloom_bits < 8:
-            raise ValueError(f"bloom_bits must be a multiple of 8, got {bloom_bits}")
-        self.bloom_bits = bloom_bits
-        self.bloom_k = bloom_k
         if keep_versions < 1:
             raise ValueError(f"keep_versions must be >= 1, got {keep_versions}")
         self.keep_versions = keep_versions
@@ -97,16 +96,13 @@ class KeyedTable:
         cur = self._current_version()
         if cur is not None:
             man = self._load_manifest(cur)
-            if man is not None:
-                self.n_buckets = int(man.get("n_buckets", n_buckets))
-                # adopt the committed bloom config like n_buckets: a
-                # default-parameter reopen must keep building sidecars,
-                # or the next compaction would silently shed them
-                blm = man.get("bloom")
-                if blm and not self.bloom_cols:
-                    self.bloom_cols = list(blm["cols"])
-                    self.bloom_bits = int(blm["bits"])
-                    self.bloom_k = int(blm["k"])
+            self.n_buckets = int(man["n_buckets"])
+            # adopt the committed bloom columns like n_buckets: a
+            # default-parameter reopen must keep building sidecars, or
+            # the next compaction would silently shed them
+            blm = man.get("bloom")
+            if blm and not self.bloom_cols:
+                self.bloom_cols = list(blm["cols"])
         self.ttl_col = ttl_col
         self.ttl_horizon: int | None = None
         ttl_f = os.path.join(self.path, "TTL")
@@ -227,57 +223,9 @@ class KeyedTable:
     def _manifest_path(self, version: str) -> str:
         return self.manifest_path_of(self.path, version)
 
-    def _load_manifest(self, version: str) -> dict | None:
-        p = self._manifest_path(version)
-        if not os.path.exists(p):
-            return None  # legacy flat layout (pre-bucketing snapshot)
-        with open(p) as fh:
+    def _load_manifest(self, version: str) -> dict:
+        with open(self._manifest_path(version)) as fh:
             return json.load(fh)
-
-    def _bucket_paths(self, manifest: dict) -> list[str]:
-        return [
-            os.path.join(self.path, ver, f"__b={b}")
-            for b, ver in sorted(manifest["buckets"].items(), key=lambda kv: int(kv[0]))
-        ]
-
-    def _footer_stats(self, bucket_dir: str) -> dict | None:
-        """Per-bucket zone map for the TTL column, read from the parquet
-        FOOTERS the write already produced (pyarrow metadata — zero Spark
-        jobs): {"min": lo, "max": hi} over every row group, or None when
-        the column is absent/non-integer/statless.  Matching leaves by
-        path_in_schema keeps map/array columns from shifting indexes."""
-        try:
-            import pyarrow.parquet as pq
-        except ImportError:  # pragma: no cover - pyarrow is baked in
-            return None
-        lo = hi = None
-        try:
-            for fn in os.listdir(bucket_dir):
-                if not fn.endswith(".parquet"):
-                    continue
-                md = pq.read_metadata(os.path.join(bucket_dir, fn))
-                for i in range(md.num_row_groups):
-                    rg = md.row_group(i)
-                    for j in range(rg.num_columns):
-                        col = rg.column(j)
-                        if col.path_in_schema != self.ttl_col:
-                            continue
-                        st = col.statistics
-                        if st is None or not st.has_min_max:
-                            return None
-                        mn, mx = st.min, st.max
-                        # integer zone maps only: the TTL compare casts
-                        # to long, and lexicographic string min/max does
-                        # NOT bound numeric order ('9' > '10')
-                        if not isinstance(mn, int) or isinstance(mn, bool):
-                            return None
-                        lo = mn if lo is None else min(lo, mn)
-                        hi = mx if hi is None else max(hi, mx)
-        except OSError:
-            return None
-        if lo is None:
-            return None
-        return {"min": int(lo), "max": int(hi)}
 
     @staticmethod
     def _bloom_positions(value, bits: int, k: int) -> list[int]:
@@ -294,15 +242,11 @@ class KeyedTable:
 
     def _bloom_pos_expr(self, col: str):
         """Spark twin of `_bloom_positions`: array of the k positions."""
+        bits = self.BLOOM_BITS
         md5 = F.md5(F.col(col).cast("string"))
-        h1 = F.conv(F.substring(md5, 1, 8), 16, 10).cast("long") % self.bloom_bits
-        h2 = (
-            F.conv(F.substring(md5, 9, 8), 16, 10).cast("long")
-            % (self.bloom_bits - 1) + 1
-        )
-        return F.array(
-            *[(h1 + F.lit(i) * h2) % self.bloom_bits for i in range(self.bloom_k)]
-        )
+        h1 = F.conv(F.substring(md5, 1, 8), 16, 10).cast("long") % bits
+        h2 = F.conv(F.substring(md5, 9, 8), 16, 10).cast("long") % (bits - 1) + 1
+        return F.array(*[(h1 + F.lit(i) * h2) % bits for i in range(self.BLOOM_K)])
 
     # Bloom hashing relies on Python str(value) matching Spark's
     # CAST(col AS STRING) bit-for-bit.  That parity holds ONLY for
@@ -330,7 +274,7 @@ class KeyedTable:
         sidecar travels WITH the bucket, so inherited buckets keep their
         filters without any manifest bookkeeping).  The build is one
         distributed pass: k bit positions per row, collect_set per
-        bucket — the driver receives at most n_buckets x bloom_bits
+        bucket — the driver receives at most n_buckets x BLOOM_BITS
         ints (the filter itself, never the data).  ``written`` names the
         bucket ids this commit materialized; the write loop is
         restricted to them, so a build layout that ever grows
@@ -350,15 +294,15 @@ class KeyedTable:
                 )
                 .groupBy("__b")
                 .agg(F.collect_set("p").alias("ps"))
-            ).collect()  # bounded: <= n_buckets rows x <= bloom_bits ints
+            ).collect()  # bounded: <= n_buckets rows x <= BLOOM_BITS ints
             for r in rows:
                 if r["__b"] not in written:
                     continue
-                bm = bytearray(self.bloom_bits // 8)
+                bm = bytearray(self.BLOOM_BITS // 8)
                 for p in r["ps"]:
                     p = int(p)
                     bm[p // 8] |= 1 << (p % 8)
-                side = {"bits": self.bloom_bits, "k": self.bloom_k,
+                side = {"bits": self.BLOOM_BITS, "k": self.BLOOM_K,
                         "bitmap": base64.b64encode(bytes(bm)).decode()}
                 with open(
                     os.path.join(build_dir, f"__b={r['__b']}",
@@ -368,11 +312,11 @@ class KeyedTable:
 
     def read_eq(self, spark: SparkSession, col: str, value) -> DataFrame | None:
         """Equality read with BLOOM data skipping on a non-key column —
-        the pruning type that still fires under hash bucketing: zone
-        maps need value-correlated layout (see the TTL note in _commit),
-        but a high-cardinality equality probe is excluded by most
-        buckets' blooms regardless of layout.  Buckets without a sidecar
-        (never bloom-built, or legacy) are scanned — absence only costs
+        the pruning type that fires under hash bucketing, where fresh
+        keys land in every bucket and a min/max skip index cannot prune:
+        a high-cardinality equality probe is excluded by most buckets'
+        blooms regardless of layout.  Buckets without a sidecar (never
+        bloom-built) are scanned — absence only costs
         pruning, never correctness; the logical filter always applies on
         top, so false positives are harmless.  `self.last_eq_scan`
         records {buckets_total, buckets_scanned} for observability.
@@ -418,9 +362,6 @@ class KeyedTable:
         if v is None:
             return None
         man = self._load_manifest(v)
-        if man is None:  # legacy flat layout: no buckets, no sidecars
-            df = self.read(spark)
-            return None if df is None else df.filter(predicate)
         man_schema = StructType.fromJson(man["schema"])
         if col in man_schema.fieldNames():
             # probe-time guard: a sidecar built before the dtype check
@@ -446,50 +387,36 @@ class KeyedTable:
                 kept[b] = ver
         self.last_eq_scan = {"buckets_total": len(man["buckets"]),
                              "buckets_scanned": len(kept)}
-        schema = man_schema
-        if not kept:
-            df = spark.createDataFrame([], schema)
-        else:
-            df = spark.read.schema(schema).parquet(
-                *self._bucket_paths({"buckets": kept})
-            )
-        return self._apply_ttl(df.filter(predicate))
+        return self._apply_ttl(
+            self._read_buckets(spark, man, kept).filter(predicate))
 
-    def _read_snapshot(
-        self, spark: SparkSession, version: str, ttl_prune: bool = False
+    def _read_buckets(
+        self, spark: SparkSession, man: dict, buckets: dict[str, str]
     ) -> DataFrame:
-        """Raw snapshot read (no TTL filter): resolve the version's
-        manifest to its bucket leaf dirs — untouched buckets live in
+        """Raw read (no TTL filter) of the ``{bucket: version}`` leaf
+        dirs under manifest ``man``'s schema, or an empty frame of that
+        schema when ``buckets`` is empty.  Untouched buckets live in
         OLDER version dirs; reading leaf dirs directly adds no inferred
-        partition column.  ``ttl_prune``: additionally SKIP buckets whose
-        manifest zone map proves every row is below the TTL horizon —
-        the Delta/Iceberg file-stats data-skipping shape; the logical
-        TTL filter still applies on top for partially-expired buckets."""
-        man = self._load_manifest(version)
-        if man is None:
-            return spark.read.parquet(os.path.join(self.path, version))
-        bucket_map = man["buckets"]
-        if ttl_prune and self.ttl_horizon is not None and man.get("stats"):
-            horizon = int(self.ttl_horizon)
-            stats = man["stats"]
-            bucket_map = {
-                b: ver
-                for b, ver in bucket_map.items()
-                if b not in stats or stats[b]["max"] >= horizon
-            }
-        paths = self._bucket_paths({"buckets": bucket_map})
+        partition column.  The manifest IS the schema authority (commits
+        normalize column order to it, and the incremental path requires
+        schema equality before inheriting buckets) — passing it skips
+        the footer-read schema-inference job Spark otherwise runs on
+        EVERY read (measured 47 -> 38 REST-visible jobs per trade
+        micro-batch; the remainder are AQE stage-jobs and broadcast
+        submissions, not extra driver actions)."""
+        schema = StructType.fromJson(man["schema"])
+        paths = [
+            os.path.join(self.path, ver, f"__b={b}")
+            for b, ver in sorted(buckets.items(), key=lambda kv: int(kv[0]))
+        ]
         if not paths:
-            return spark.createDataFrame(
-                [], StructType.fromJson(man["schema"])
-            )
-        # the manifest IS the schema authority (commits normalize column
-        # order to it, and the incremental path requires schema equality
-        # before inheriting buckets) — passing it skips the footer-read
-        # schema-inference job Spark otherwise runs on EVERY snapshot
-        # read (measured 47 -> 38 REST-visible jobs per trade micro-batch;
-        # the remainder are AQE stage-jobs and broadcast submissions, not
-        # extra driver actions)
-        return spark.read.schema(StructType.fromJson(man["schema"])).parquet(*paths)
+            return spark.createDataFrame([], schema)
+        return spark.read.schema(schema).parquet(*paths)
+
+    def _read_snapshot(self, spark: SparkSession, version: str) -> DataFrame:
+        """Raw read (no TTL filter) of every bucket of ``version``."""
+        man = self._load_manifest(version)
+        return self._read_buckets(spark, man, man["buckets"])
 
     def exists(self, spark: SparkSession) -> bool:
         return self._current_version() is not None
@@ -498,7 +425,7 @@ class KeyedTable:
         v = self._current_version()
         if v is None:
             return None
-        return self._apply_ttl(self._read_snapshot(spark, v, ttl_prune=True))
+        return self._apply_ttl(self._read_snapshot(spark, v))
 
     def read_version(self, spark: SparkSession, steps_back: int = 0) -> DataFrame | None:
         """Time-travel read: the snapshot `steps_back` merges ago
@@ -575,8 +502,8 @@ class KeyedTable:
         self,
         df: DataFrame,
         inherit: dict[str, str],
-        flip: bool = True,
-        expected_base: str | None | bool = False,
+        flip: bool,
+        expected_base: str | None,
         skip_empty: bool = False,
     ) -> str | None:
         """Crash-safe bucketed commit: write `df`'s rows partitioned by
@@ -588,6 +515,12 @@ class KeyedTable:
         absent — a crash leaves either the old or the new version
         current, and an uncommitted version dir is invisible (HISTORY is
         appended only after the flip).
+
+        ``expected_base``: the snapshot version (None for an absent
+        table) the commit was computed against.  If CURRENT moved off it
+        by flip time, the commit raises ``CommitConflictError`` instead
+        of dropping the winner's buckets; ``flip=False`` stages the
+        version, and sinks/txn.py makes the same check at its flip.
 
         ``skip_empty``: when the write produced no bucket at all, drop the
         build dir and return None instead of committing — the write itself
@@ -640,8 +573,7 @@ class KeyedTable:
             # commit conflict — convert it so compact()/rescale()/merge()
             # all fail with the same loud, retryable contract.
             if (
-                expected_base is not False
-                and self._current_version() != expected_base
+                self._current_version() != expected_base
                 and any(
                     tag in str(e)
                     for tag in ("FILE_NOT_EXIST", "FileNotFound", "PATH_NOT_FOUND")
@@ -666,47 +598,12 @@ class KeyedTable:
             self._write_bloom_sidecars(df.sparkSession, build_dir, written)
         buckets = dict(inherit)
         buckets.update({b: v for b in written})
-        man = {"n_buckets": self.n_buckets, "schema": schema_json, "buckets": buckets}
+        # `base` is read back by sinks/txn.py when it flips a staged version
+        man = {"n_buckets": self.n_buckets, "schema": schema_json,
+               "buckets": buckets, "base": expected_base}
         if self.bloom_cols:
             man["bloom"] = {"cols": self.bloom_cols,
-                            "bits": self.bloom_bits, "k": self.bloom_k}
-        # per-bucket zone maps for the TTL column: written buckets read
-        # their own parquet footers (driver-side, no job); inherited
-        # buckets copy the stats of the snapshot they are inherited from.
-        # read() uses these to SKIP wholly-expired buckets (data
-        # skipping); absence of a bucket's entry just means no pruning.
-        # Honest scope note: buckets are HASH-partitioned, so fresh keys
-        # land everywhere and a hot table's per-bucket max tracks the
-        # global max — pruning fires mainly for idle/cold tables (whole
-        # buckets aged out together) and dimension snapshots, unlike
-        # Delta/Iceberg where files are write-time-correlated and stats
-        # prune hot tables too.  Correct always, profitable when cold.
-        base_v = (
-            expected_base
-            if isinstance(expected_base, str)
-            else self._current_version()
-        )
-        prev_stats = {}
-        if base_v is not None:
-            prev_man = self._load_manifest(base_v)
-            if prev_man is not None:
-                prev_stats = prev_man.get("stats", {})
-        stats = {}
-        for b in buckets:
-            if b in written:
-                st = self._footer_stats(os.path.join(build_dir, f"__b={b}"))
-                if st is not None:
-                    stats[b] = st
-            elif b in prev_stats:
-                stats[b] = prev_stats[b]
-        if stats:
-            man["stats"] = stats
-        if expected_base is not False:
-            # the snapshot version this commit was computed against —
-            # optimistic-concurrency checks compare it to CURRENT at flip
-            # time (staged versions are flipped later by sinks/txn.py,
-            # which reads it back from here)
-            man["base"] = expected_base
+                            "bits": self.BLOOM_BITS, "k": self.BLOOM_K}
         with open(os.path.join(build_dir, "MANIFEST.json"), "w") as fh:
             json.dump(man, fh)
         if not flip:
@@ -734,7 +631,7 @@ class KeyedTable:
                 "before committing, or this merge and the journaled batch "
                 "would overwrite each other in recovery order"
             )
-        if expected_base is not False and self._current_version() != expected_base:
+        if self._current_version() != expected_base:
             # another writer flipped CURRENT while this merge ran: our
             # inherited-bucket map references the superseded snapshot, so
             # flipping would silently drop the winner's buckets.  Abort
@@ -764,9 +661,10 @@ class KeyedTable:
         # bucket at it (untouched buckets are inherited across versions)
         referenced = set(retained_list) | {v}
         for r in retained_list:
-            r_man = self._load_manifest(r)
-            if r_man is not None:
-                referenced.update(r_man["buckets"].values())
+            try:
+                referenced.update(self._load_manifest(r)["buckets"].values())
+            except FileNotFoundError:
+                pass  # a concurrent writer's GC removed it after _history listed it
         for d in os.listdir(self.path):
             if d.startswith("v_") and d not in referenced:
                 protected = False
@@ -816,7 +714,7 @@ class KeyedTable:
         captured HERE, so the conflict window covered is entry-to-flip;
         a replace() caller that read state earlier still owns the gap
         between its read and this call."""
-        self._commit(df, inherit={}, expected_base=self._current_version())
+        self._commit(df, inherit={}, flip=True, expected_base=self._current_version())
 
     def replace(self, df: DataFrame) -> None:
         """Full-snapshot overwrite for callers that have ALREADY computed
@@ -895,8 +793,7 @@ class KeyedTable:
 
         man = self._load_manifest(cur_version)
         incremental = (
-            man is not None
-            and man.get("n_buckets") == self.n_buckets
+            man["n_buckets"] == self.n_buckets
             and bool(self.keys)
             and sorted(
                 (f["name"], f["type"]) if isinstance(f["type"], str) else (f["name"], json.dumps(f["type"]))
@@ -908,8 +805,8 @@ class KeyedTable:
             )
         )
         if not incremental:
-            # legacy layout / bucket-count change / schema evolution:
-            # one full rewrite re-baselines every bucket on the new shape
+            # bucket-count change or schema evolution: one full rewrite
+            # re-baselines every bucket on the new shape
             current = self._apply_ttl(self._read_snapshot(spark, cur_version))
             keep = current.join(batch.select(*self.keys), on=self.keys, how="left_anti")
             merged = keep.unionByName(batch, allowMissingColumns=True)
@@ -949,18 +846,9 @@ class KeyedTable:
                 # needs a real version name to journal and flip.
                 return cur_version
             cur_map = man["buckets"]
-            touched_paths = [
-                os.path.join(self.path, cur_map[b], f"__b={b}")
-                for b in sorted(touched, key=int)
-                if b in cur_map
-            ]
-            if touched_paths:
-                # manifest schema: skip per-merge footer schema inference
-                cur_t = self._apply_ttl(
-                    spark.read.schema(
-                        StructType.fromJson(man["schema"])
-                    ).parquet(*touched_paths)
-                )
+            stored = {b: cur_map[b] for b in touched if b in cur_map}
+            if stored:
+                cur_t = self._apply_ttl(self._read_buckets(spark, man, stored))
                 keep = cur_t.join(
                     batch.select(*self.keys), on=self.keys, how="left_anti"
                 )
@@ -1030,9 +918,8 @@ class KeyedTable:
             # adopt the winner's (possibly rescaled) layout before
             # retrying, like a fresh open would
             cur = self._current_version()
-            man = self._load_manifest(cur) if cur else None
-            if man is not None:
-                self.n_buckets = int(man.get("n_buckets", self.n_buckets))
+            if cur is not None:
+                self.n_buckets = int(self._load_manifest(cur)["n_buckets"])
         assert last is not None
         raise last
 
@@ -1053,7 +940,7 @@ class KeyedTable:
         base = self._current_version()
         current = self.read(spark)
         if current is not None:
-            self._commit(current, inherit={}, expected_base=base)
+            self._commit(current, inherit={}, flip=True, expected_base=base)
 
     def rescale(self, spark: SparkSession, n_buckets: int) -> None:
         """Re-bucket the table to ``n_buckets`` (one full rewrite); later
@@ -1067,7 +954,7 @@ class KeyedTable:
         current = self.read(spark)
         self.n_buckets = int(n_buckets)
         if current is not None:
-            self._commit(current, inherit={}, expected_base=base)
+            self._commit(current, inherit={}, flip=True, expected_base=base)
 
     def maybe_rescale(
         self, spark: SparkSession, max_rows_per_bucket: int = 1_000_000
@@ -1103,43 +990,26 @@ class KeyedTable:
         if v is None or not self.keys:
             return self.read(spark)
         man = self._load_manifest(v)
-        if man is None:
-            df = self.read(spark)  # legacy layout: no pruning available
-        else:
-            kvs = [
-                kv if isinstance(kv, tuple) else (kv,) for kv in key_values
-            ]
-            # one tiny local job hashes the literal keys with the SAME
-            # expression the writer used — never re-derive F.hash in
-            # Python, where seed/semantics could drift.  Key types come
-            # from the manifest's stored schema (already on disk) — a
-            # snapshot read here would open every bucket's footer and
-            # defeat the point-read cost model.
-            ftypes = {
-                f["name"]: (f["type"] if isinstance(f["type"], str) else "string")
-                for f in man["schema"]["fields"]
-            }
-            probe = spark.createDataFrame(
-                kvs, ", ".join(f"{k} {ftypes[k]}" for k in self.keys)
-            )
-            buckets = {
-                str(r["__b"])
-                for r in probe.select(self._bucket_expr().alias("__b")).collect()
-            }
-            paths = [
-                os.path.join(self.path, ver, f"__b={b}")
-                for b, ver in man["buckets"].items()
-                if b in buckets
-            ]
-            if not paths:
-                return self._apply_ttl(
-                    spark.createDataFrame([], StructType.fromJson(man["schema"]))
-                )
-            df = self._apply_ttl(
-                spark.read.schema(
-                    StructType.fromJson(man["schema"])
-                ).parquet(*paths)
-            )
+        kvs = [kv if isinstance(kv, tuple) else (kv,) for kv in key_values]
+        # one tiny local job hashes the literal keys with the SAME
+        # expression the writer used — never re-derive F.hash in Python,
+        # where seed/semantics could drift.  Key types come from the
+        # manifest's stored schema (already on disk) — a snapshot read
+        # here would open every bucket's footer and defeat the point-read
+        # cost model.
+        ftypes = {
+            f["name"]: (f["type"] if isinstance(f["type"], str) else "string")
+            for f in man["schema"]["fields"]
+        }
+        probe = spark.createDataFrame(
+            kvs, ", ".join(f"{k} {ftypes[k]}" for k in self.keys)
+        )
+        buckets = {
+            str(r["__b"])
+            for r in probe.select(self._bucket_expr().alias("__b")).collect()
+        }
+        df = self._apply_ttl(self._read_buckets(
+            spark, man, {b: ver for b, ver in man["buckets"].items() if b in buckets}))
         cond = None
         for kv in key_values:
             kv = kv if isinstance(kv, tuple) else (kv,)

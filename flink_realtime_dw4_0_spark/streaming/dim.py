@@ -59,8 +59,8 @@ def dim_foreach_batch(
                     F.col("type"),
                     F.col("ts"),
                 )
-                if not sub.limit(1).count():
-                    continue
+                # no emptiness probe: merge() commits nothing for an
+                # empty batch, so a quiet table costs no version
                 warehouse.apply_ddl([{"sink_table": cfg["sink_table"], "op": "r"}])
                 warehouse.merge_dim_batch(spark, sub, cfg["sink_table"], row_key="rowkey")
 

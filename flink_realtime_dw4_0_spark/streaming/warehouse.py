@@ -274,10 +274,18 @@ class Warehouse:
         """Batch-drain the whole warehouse: ODS→DWD first, then the
         unique-user chain, then the page windows, over the
         freshly-written DWD streams (layered, like the reference's
-        separate jobs)."""
-        for q in self.start(raw_db, raw_log, available_now=True):
-            q.awaitTermination(timeout)
-        for q in self.flags_queries(available_now=True):
-            q.awaitTermination(timeout)
-        for q in self.dws_queries(available_now=True):
-            q.awaitTermination(timeout)
+        separate jobs).  A layer that outlives ``timeout`` seconds stops
+        its queries and raises ``TimeoutError``, so the next layer never
+        starts over its partial output."""
+        for phase in (lambda: self.start(raw_db, raw_log, available_now=True),
+                      lambda: self.flags_queries(available_now=True),
+                      lambda: self.dws_queries(available_now=True)):
+            queries = list(phase())
+            for q in queries:
+                if not q.awaitTermination(timeout):
+                    for r in queries:
+                        r.stop()
+                    raise TimeoutError(
+                        f"warehouse query {q.name!r} did not finish within "
+                        f"{timeout} s; its layer was stopped"
+                    )

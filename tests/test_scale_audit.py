@@ -31,7 +31,7 @@ COLLECT_ALLOWLIST = [
     ("sinks/upsert.py", r"probe\.distinct\(\)\.collect\(\)",
      "touched-bucket probe: bounded by n_buckets distinct values"),
     ("sinks/upsert.py", r"agg\(F\.collect_set\(.p.\)",
-     "bloom sidecar build: <= n_buckets rows x <= bloom_bits bit "
+     "bloom sidecar build: <= n_buckets rows x <= BLOOM_BITS bit "
      "positions (the filter itself, never the data)"),
     ("sinks/upsert.py", r"probe\.select\(self\._bucket_expr\(\)",
      "point-lookup bucket probe: one row per requested key"),

@@ -201,6 +201,48 @@ def test_dim_pipeline_merge_prune_delete(spark, tmp_path):
     assert wh.get_row_of(spark, "dim_base_dic", "rowkey", "1202") is None
 
 
+def test_dim_merge_owns_emptiness(spark, tmp_path, monkeypatch):
+    """The dim path runs no emptiness probe of its own: a configured dim
+    table that gets no rows in a batch commits no version, and an
+    upsert-only batch on an existing dim table commits exactly one."""
+    wh = DimWarehouse(str(tmp_path / "dimwh_empty"))
+    config = spark.createDataFrame(
+        [("base_dic", "dim_base_dic", "dic_code,dic_name", "info", "dic_code", "r"),
+         ("sku_info", "dim_sku_info", "id,sku_name", "info", "id", "r")],
+        schemas.TABLE_PROCESS_DIM,
+    )
+    fn = dim_foreach_batch(wh, lambda s: config)
+    committed = []
+    orig = KeyedTable._commit
+
+    def counting(self, df, inherit, flip, expected_base, skip_empty=False):
+        v = orig(self, df, inherit, flip, expected_base, skip_empty)
+        if v is not None:
+            committed.append(os.path.basename(self.path))
+        return v
+
+    monkeypatch.setattr(KeyedTable, "_commit", counting)
+
+    fn(ksrc.topic_db(values_df(spark, [
+        mx("base_dic", "insert", {"dic_code": "1201", "dic_name": "好评"}, ts=1),
+        mx("base_dic", "insert", {"dic_code": "1202", "dic_name": "中评"}, ts=1),
+    ]), watermark=None), 0)
+    assert committed == ["dim_base_dic"]
+    assert wh.read_dim(spark, "dim_sku_info") is None
+
+    committed.clear()
+    fn(ksrc.topic_db(values_df(spark, [
+        mx("base_dic", "update", {"dic_code": "1201", "dic_name": "NEW"}, ts=2),
+        mx("base_dic", "insert", {"dic_code": "1203", "dic_name": "差评"}, ts=2),
+    ]), watermark=None), 1)
+    assert committed == ["dim_base_dic"]
+    assert wh.read_dim(spark, "dim_sku_info") is None
+    rows = {r.rowkey: dict(r.data) for r in wh.read_dim(spark, "dim_base_dic").collect()}
+    assert rows == {"1201": {"dic_code": "1201", "dic_name": "NEW"},
+                    "1202": {"dic_code": "1202", "dic_name": "中评"},
+                    "1203": {"dic_code": "1203", "dic_name": "差评"}}
+
+
 def test_dim_bloom_attr_probe_prunes_buckets(spark, tmp_path):
     """Secondary-attribute dim probe with bloom data skipping, through
     the REAL dim pipeline path: dim_sku_info is keyed (bucketed) by sku
@@ -843,6 +885,44 @@ def test_full_warehouse_end_to_end(spark, tmp_path):
         ends = [r[0] for r in windows.partials.read(spark)
                 .select(F.unix_millis("edt")).collect()]
         assert ends and min(ends) > final["late_watermark_ms"]
+
+
+class _StubQuery:
+    """A streaming-query handle whose drain finishes, or never does."""
+
+    def __init__(self, name, finishes):
+        self.name, self.finishes, self.stopped = name, finishes, False
+
+    def awaitTermination(self, timeout=None):
+        return self.finishes
+
+    def stop(self):
+        self.stopped = True
+
+
+def test_run_available_now_raises_when_a_layer_times_out(spark, tmp_path):
+    """A layer whose query outlives the timeout stops and raises,
+    naming the query; the next layer never starts over its partial
+    output."""
+    from flink_realtime_dw4_0_spark.streaming.warehouse import Warehouse, WarehousePaths
+
+    wh = Warehouse(spark, WarehousePaths(str(tmp_path / "wh")), lambda s: None)
+    db, log = _StubQuery("db", True), _StubQuery("log", False)
+    later = []
+    wh.start = lambda *a, **k: (db, log)
+    wh.flags_queries = lambda **k: later.append("flags") or []
+    wh.dws_queries = lambda **k: later.append("dws") or []
+    with pytest.raises(TimeoutError, match="'log'"):
+        wh.run_available_now(None, None, timeout=1)
+    assert log.stopped and later == []
+
+    # a drain whose every layer finishes runs all three in order
+    uu = _StubQuery("dws_uu", True)
+    wh.start = lambda *a, **k: (_StubQuery("db", True), _StubQuery("log", True))
+    wh.flags_queries = lambda **k: later.append("flags") or [uu]
+    wh.dws_queries = lambda **k: later.append("dws") or []
+    wh.run_available_now(None, None, timeout=1)
+    assert later == ["flags", "dws"] and not uu.stopped
 
 
 def test_warehouse_refuses_old_uu_checkpoints(spark, tmp_path):
@@ -2082,8 +2162,8 @@ def test_keyed_table_bucketed_incremental_merge(spark, tmp_path):
 
 def test_keyed_table_bloom_equality_skipping(spark, tmp_path):
     """Per-bucket bloom sidecars prune equality probes on a NON-key
-    column — the skipping type that still fires under hash bucketing
-    (zone maps need value-correlated layout).  A present value scans
+    column — the skipping type that fires under hash bucketing, where
+    fresh keys land in every bucket.  A present value scans
     only the buckets whose blooms admit it, an absent value scans ~none,
     results always equal the brute-force filter, sidecars ride along
     with inherited buckets across incremental merges, and a bloom-less
@@ -2196,6 +2276,69 @@ def test_keyed_table_bloom_dtype_guard(spark, tmp_path):
     with _pytest.raises(ValueError, match="integral/string"):
         tb2._read_bloom_pruned(spark, "price", [2],
                                F.col("price") == F.lit(2))
+
+
+def test_keyed_table_reads_manifest_with_zone_maps_and_bloom_geometry(
+    spark, tmp_path, monkeypatch
+):
+    """A table written by an earlier layout: its CURRENT manifest carries
+    a per-bucket `stats` zone map and a bloom entry with bits/k other
+    than today's.  It reads the same rows, bloom probes prune as they
+    did (each sidecar carries its own geometry), an incremental merge
+    rewrites only the touched bucket, and the next manifest drops the
+    `stats` entry."""
+    import json as _json
+
+    path = str(tmp_path / "old")
+    monkeypatch.setattr(KeyedTable, "BLOOM_BITS", 1024)
+    monkeypatch.setattr(KeyedTable, "BLOOM_K", 3)
+    old = KeyedTable(path, keys=["k"], n_buckets=8, bloom_cols=["sku"])
+    old.merge(spark, spark.createDataFrame(
+        [(f"k{i}", f"sku{i % 50}", i) for i in range(200)],
+        "k string, sku string, ts long"))
+    v1 = old._current_version()
+    man_f = KeyedTable.manifest_path_of(path, v1)
+    with open(man_f) as fh:
+        man = _json.load(fh)
+    assert man["bloom"] == {"cols": ["sku"], "bits": 1024, "k": 3}
+    # the zone map an earlier writer recorded from the parquet footers
+    by_b = {}
+    for r in old.read(spark).select(old._bucket_expr().alias("b"), "ts").collect():
+        lo, hi = by_b.get(str(r.b), (r.ts, r.ts))
+        by_b[str(r.b)] = (min(lo, r.ts), max(hi, r.ts))
+    man["stats"] = {b: {"min": lo, "max": hi} for b, (lo, hi) in by_b.items()}
+    with open(man_f, "w") as fh:
+        _json.dump(man, fh)
+    old_scan = old.read_eq(spark, "sku", "sku7")
+    want_eq = sorted(r.k for r in old_scan.collect())
+    scanned = old.last_eq_scan
+    monkeypatch.undo()
+
+    tb = KeyedTable(path, keys=["k"])
+    assert tb.n_buckets == 8 and tb.bloom_cols == ["sku"]
+    assert sorted((r.k, r.ts) for r in tb.read(spark).collect()) == [
+        (f"k{i}", i) for i in sorted(range(200), key=lambda i: f"k{i}")]
+    assert sorted(r.k for r in tb.read_eq(spark, "sku", "sku7").collect()) == want_eq
+    assert tb.last_eq_scan == scanned
+    assert scanned["buckets_scanned"] < scanned["buckets_total"]
+    # a horizon reads through the TTL filter, not the recorded stats
+    tb.set_ttl_horizon(150)
+    assert {r.ts for r in tb.read(spark).collect()} == set(range(150, 200))
+    tb.set_ttl_horizon(None)
+
+    tb.merge(spark, spark.createDataFrame([("k3", "sku7", 999)],
+                                          "k string, sku string, ts long"))
+    v2 = tb._current_version()
+    assert len([d for d in os.listdir(os.path.join(path, v2))
+                if d.startswith("__b=")]) == 1
+    man2 = tb._load_manifest(v2)
+    assert "stats" not in man2
+    assert set(man2["buckets"].values()) == {v1, v2}
+    got = {r.k: r.ts for r in tb.read(spark).collect()}
+    assert len(got) == 200 and got["k3"] == 999
+    # sidecars of both geometries answer the probe (k3 moved to sku7)
+    assert sorted(r.k for r in tb.read_eq(spark, "sku", "sku7").collect()) == sorted(
+        want_eq + ["k3"])
 
 
 def test_keyed_table_schema_evolution(spark, tmp_path):
@@ -3139,47 +3282,32 @@ def test_keyed_table_adaptive_rescale(spark, tmp_path):
     assert tb2.maybe_rescale(spark, max_rows_per_bucket=1000) == 8
 
 
-def test_keyed_table_zone_map_pruning(spark, tmp_path):
-    """Per-bucket TTL zone maps (Delta/Iceberg file-stats data skipping):
-    commits record each bucket's min/max ttl from the parquet footers
-    already on disk (no extra job); read() SKIPS buckets whose max is
-    below the TTL horizon entirely — fewer input files, identical rows —
-    and inherited buckets keep their stats across incremental merges."""
-    import json as _json
-    import os
-
-    tb = KeyedTable(str(tmp_path / "zm"), keys=["k"], n_buckets=4)
+def test_keyed_table_ttl_horizon_across_merges(spark, tmp_path):
+    """The TTL horizon hides expired rows from read() whichever bucket
+    they sit in, an incremental merge after the horizon is cleared sees
+    every row again, and a later horizon applies to rows the merge
+    rewrote as well as to inherited buckets."""
+    tb = KeyedTable(str(tmp_path / "ttlm"), keys=["k"], n_buckets=4)
     # ts correlates with bucket: every key in bucket b gets ts 100*(b+1),
-    # discovered from the committed layout so the test is hash-agnostic
+    # discovered from the writer's hash so the test is hash-agnostic
     probe = spark.createDataFrame([(f"k{i}",) for i in range(64)], "k string")
     from pyspark.sql import functions as F2
     bmap = {r.k: r.b for r in probe.select(
         "k", F2.pmod(F2.hash("k"), F2.lit(4)).alias("b")).collect()}
     rows = [(k, 100 * (b + 1)) for k, b in bmap.items()]
     tb.merge(spark, spark.createDataFrame(rows, "k string, ts long"))
-    man = tb._load_manifest(tb._current_version())
-    assert set(man["stats"]) == set(man["buckets"])
-    for b, st in man["stats"].items():
-        assert st == {"min": 100 * (int(b) + 1), "max": 100 * (int(b) + 1)}
 
-    # horizon above buckets 0 and 1 (ts 100, 200): read prunes their files
-    all_files = set(tb.read(spark).inputFiles())
+    # horizon above buckets 0 and 1 (ts 100, 200): their rows vanish
     tb.set_ttl_horizon(250)
-    pruned = set(tb.read(spark).inputFiles())
-    assert pruned < all_files
-    assert not any("__b=0" in f or "__b=1" in f for f in pruned)
     want = {k for k, b in bmap.items() if b >= 2}
     assert {r.k for r in tb.read(spark).collect()} == want
 
-    # an incremental merge touching ONE bucket inherits the others' stats
+    # clear the horizon, then an incremental merge touching ONE bucket
     tb.set_ttl_horizon(None)
+    assert {r.k for r in tb.read(spark).collect()} == set(bmap)
     some_k = next(k for k, b in bmap.items() if b == 3)
     tb.merge(spark, spark.createDataFrame([(some_k, 999)], "k string, ts long"))
-    man2 = tb._load_manifest(tb._current_version())
-    assert man2["stats"]["3"]["max"] == 999          # recomputed for touched
-    for b in ("0", "1", "2"):
-        assert man2["stats"][b] == man["stats"][b]   # inherited verbatim
-    # stats are honest after the merge (ttl filter result matches)
+    assert {r.k for r in tb.read(spark).collect()} == set(bmap)
     tb.set_ttl_horizon(950)
     assert {r.k for r in tb.read(spark).collect()} == {some_k}
 
